@@ -510,7 +510,8 @@ def q_kg_merge_canonical(spark, sf_dir):
     m = mentions_from_annotated(ann, key_col="url")
     old = m.filter(F.pmod(F.xxhash64("url"), F.lit(3)) != 0)
     new = m.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 0)
-    inc = merge_canonicalize(new, canonicalize_mentions(old))
+    existing = canonicalize_mentions(old).localCheckpoint()
+    inc = merge_canonicalize(new, existing)
     return inc.select(
         "entity_id", "canonical_text", "norm",
         F.col("n_mentions").cast("long").alias("n_mentions"),

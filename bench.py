@@ -673,13 +673,13 @@ def scale_up(cores: int, deadline: float | None = None) -> dict:
         # incremental-canonicalization fold leg (r6 verdict #8): fold a
         # 1/16-size NEW vocabulary into the 4x accumulated canonical
         # table via merge_canonicalize — the job-layer incremental
-        # path, in its PRODUCTION shape: broadcast_probe=True (the
-        # increment's band keys broadcast) plus the touched-component
-        # restriction, so the accumulated vocabulary is scanned
-        # map-side but never re-shuffled or re-clustered. Runs with the
-        # default broadcast threshold (that IS the production plan for
-        # a small increment); the comparison target is the just-
-        # measured full 4x batch rebuild at the same accumulated scale.
+        # path, in its production shape: under the default broadcast
+        # threshold the increment measures small, so its frames (band
+        # keys included) broadcast, and with the touched-component
+        # restriction the accumulated vocabulary is scanned map-side
+        # but never re-shuffled or re-clustered. The comparison target
+        # is the just-measured full 4x batch rebuild at the same
+        # accumulated scale.
         from prose_spark.operators.canonicalize import (
             merge_canonicalize,
         )
@@ -687,8 +687,7 @@ def scale_up(cores: int, deadline: float | None = None) -> dict:
         new_mentions = md5_mentions(md5_base(1250, "newform"))
         marker = _exec_marker(spark)
         t0 = time.time()
-        merged = merge_canonicalize(
-            new_mentions, existing4, broadcast_probe=True)
+        merged = merge_canonicalize(new_mentions, existing4)
         n_merged = merged.count()
         dt = time.time() - t0
         out["merge_canonicalize_fold_4x"] = {
@@ -729,8 +728,7 @@ def scale_up(cores: int, deadline: float | None = None) -> dict:
         new16 = md5_mentions(md5_base(1250, "newform16"))
         marker = _exec_marker(spark)
         t0 = time.time()
-        merged16 = merge_canonicalize(
-            new16, existing16, broadcast_probe=True)
+        merged16 = merge_canonicalize(new16, existing16)
         n_merged16 = merged16.count()
         dt = time.time() - t0
         c16x = out["canonicalize_16x"]

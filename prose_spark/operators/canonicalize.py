@@ -78,35 +78,38 @@ def lsh_candidate_pairs(
     bands: int = 10,
     probe: DataFrame | None = None,
     max_bucket_size: int | None = None,
-    broadcast_probe: bool = False,
 ) -> DataFrame:
     """Distinct normalized forms -> near-duplicate pairs (a, b) with true
     char-3-gram Jaccard distance <= threshold, via the native banded
-    MinHash core (operators.dedup.banded_minhash_pairs) — exact-verified
+    MinHash core (operators.dedup.banded_pair_ids) — exact-verified
     candidates, no pyspark.ml fit, shuffle only on band keys.
 
     forms: DataFrame with column ``norm`` (distinct).
     probe: optional ``norm`` subset — asymmetric band join yielding only
-    pairs touching a probe form (the incremental-merge path).
+    pairs touching a probe form (the incremental-merge path); a
+    broadcast hint on it keeps ``forms`` map-side.
     max_bucket_size: drop band buckets above this size before the pair
     join — the quadratic-densification guard for web-scale vocabularies
     (hot stop-word-like surfaces collide whole band buckets); None (the
     default) keeps exact blocking semantics.
-    """
-    from prose_spark.operators.dedup import banded_minhash_pairs
 
-    d = forms.select(
-        F.col("norm").alias("k"), _char_grams("norm").alias("g")
+    The grams are a pure function of the form, so the verify recomputes
+    them on the deduplicated pair rows instead of re-joining ``forms``.
+    """
+    from prose_spark.operators.dedup import banded_pair_ids, jaccard_verify
+
+    def keyed(df):
+        return df.select(F.col("norm").alias("k"),
+                         _char_grams("norm").alias("g"))
+
+    pair_ids = banded_pair_ids(
+        keyed(forms), n_hashes, bands, max_bucket_size=max_bucket_size,
+        probe=keyed(probe) if probe is not None else None,
     )
-    p = (
-        probe.select(F.col("norm").alias("k"),
-                     _char_grams("norm").alias("g"))
-        if probe is not None else None
+    pairs = pair_ids.select(
+        "a", "b", _char_grams("a").alias("ga"), _char_grams("b").alias("gb")
     )
-    return banded_minhash_pairs(
-        d, jaccard_max_distance, n_hashes, bands, probe=p,
-        max_bucket_size=max_bucket_size, broadcast_probe=broadcast_probe,
-    ).select("a", "b")
+    return jaccard_verify(pairs, jaccard_max_distance).select("a", "b")
 
 
 def lsh_candidate_pairs_ml(
@@ -154,11 +157,22 @@ def _edge_checksum(e: DataFrame) -> tuple[int, int]:
     return row["n"], int(row["h"])
 
 
+# driver memory one collected edge row costs beyond its id characters:
+# its two Python id objects and the gate's set entries (measured ~340 B
+# peak for two short string ids on CPython 3.11, collected as Arrow)
+_DRIVER_ROW_BYTES = 400
+
+
 def _union_find_local(spark, pairs: list, node_list: list, id_type,
                       stats: dict | None) -> DataFrame:
     """Driver-side union-find for small edge sets — identical output
     contract (comp = min member). Attaching the larger root under the
-    smaller keeps every root the component minimum."""
+    smaller keeps every root the component minimum. The result is an
+    Arrow-built local relation, so the planner sees its exact size."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
     parent: dict = {}
 
     def find(x):
@@ -179,14 +193,16 @@ def _union_find_local(spark, pairs: list, node_list: list, id_type,
     if stats is not None:
         stats["rounds"] = 0
         stats["path"] = "local"
-    from pyspark.sql import types as T
-
     schema = T.StructType([
         T.StructField("node", id_type), T.StructField("comp", id_type),
     ])
-    return spark.createDataFrame(
-        [(n, find(n)) for n in sorted(nodes)], schema
-    )
+    ordered = sorted(nodes)
+    arrow_type = to_arrow_type(id_type)
+    table = pa.table({
+        "node": pa.array(ordered, arrow_type),
+        "comp": pa.array([find(n) for n in ordered], arrow_type),
+    })
+    return spark.createDataFrame(table, schema)
 
 
 def connected_components(
@@ -209,57 +225,51 @@ def connected_components(
     ``stats`` to read back the round count.
 
     ``driver_threshold`` > 0 enables a size gate: when the distinct edge
-    count is at or below it AND the estimated collected size is under
-    ``driver_max_bytes``, a driver-side union-find (same output contract)
-    replaces ~2 shuffles+1 collect per round with one collect — the
-    practical fast path for post-blocking entity graphs, which are tiny
-    relative to the corpus. The byte term makes the gate robust to a
-    long-surface vocabulary: 2M edges of 10-char norms fit a 24g driver
-    easily, 2M edges of 2KB surfaces would not. Above either bound (the
-    100 TB case) the distributed contraction runs unchanged.
+    count is at or below it AND the estimated driver memory of the
+    collected raw rows is under ``driver_max_bytes``, a driver-side
+    union-find (same output contract) replaces ~2 shuffles+1 collect per
+    round with one collect — the practical fast path for post-blocking
+    entity graphs, which are tiny relative to the corpus. The estimate
+    bounds bytes AND rows: the id characters plus _DRIVER_ROW_BYTES per
+    raw row, so a long-surface vocabulary and a duplicate-heavy edge
+    list both count against the cap (at the 64 MB default the local path
+    takes at most ~170k raw rows). Above either bound (the 100 TB case)
+    the distributed contraction runs unchanged.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import types as T
 
     # ONE materialization of the incoming edge set; everything below —
     # the deduped working set, the gate's collected node list, and the
     # distributed path's node frame — derives from this checkpoint, so
     # the (possibly expensive: NER annotate -> mentions -> band join)
-    # upstream lineage is evaluated exactly once per call.
-    raw = edges.select("a", "b").localCheckpoint()
+    # upstream lineage is evaluated exactly once per call. The gate's
+    # size is observed during that same job: sized on RAW, not the
+    # deduped working set, because the local path collects raw rows.
+    id_is_str = isinstance(edges.schema["a"].dataType, T.StringType)
+    chars = (F.length("a") + F.length("b")).cast("long") if id_is_str \
+        else F.lit(16).cast("long")
+    size = Observation()
+    raw = edges.select("a", "b").observe(
+        size, F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(chars), F.lit(0)).alias("chars"),
+    ).localCheckpoint()
     e_plan = raw.filter(F.col("a") != F.col("b")).distinct()
     if driver_threshold > 0:
-        id_is_str = isinstance(raw.schema["a"].dataType, T.StringType)
-        size_agg = [F.count("*").alias("n")]
-        if id_is_str:
-            size_agg.append(
-                F.coalesce(
-                    F.sum((F.length("a") + F.length("b")).cast("long")),
-                    F.lit(0),
-                ).alias("chars")
-            )
-        # size the gate on RAW, not the deduped working set: the local
-        # path also collects the node list from raw, so a self-loop- or
-        # duplicate-heavy input (tiny after dedup, huge before) must
-        # count against the cap. Over-estimating only pushes borderline
-        # inputs to the distributed path — safe.
-        row = raw.agg(*size_agg).collect()[0]
-        n_raw = row["n"]
-        est_bytes = int(row["chars"]) if id_is_str else n_raw * 16
+        observed = size.get
+        est_bytes = observed["chars"] + observed["n"] * _DRIVER_ROW_BYTES
         if est_bytes <= driver_max_bytes:
-            # the byte cap (checked above) bounds this collect. Collect
-            # the RAW checkpointed edges in ONE shuffle-free job and do
-            # the self-loop filter, ordered-pair dedup (the gate's
-            # distinct-edge count) and node-set derivation driver-side —
-            # the former shape ran a distinct+limit collect AND a
-            # distinct node-list collect, i.e. two extra exchanges and
-            # one extra job over the same tiny frame. Union-find output
-            # (comp = min member) is insensitive to edge order, so the
-            # result is unchanged.
-            rows = raw.collect()
+            # the estimate (checked above) bounds this collect. Collect
+            # the RAW checkpointed edges as Arrow (no per-row Row
+            # objects) in ONE shuffle-free job and do the self-loop
+            # filter, ordered-pair dedup (the gate's distinct-edge
+            # count) and node-set derivation driver-side. Union-find
+            # output (comp = min member) is insensitive to edge order.
             pairs_set: set = set()
             nodes_set: set = set()
-            for r in rows:
-                a, b = r["a"], r["b"]
+            table = raw.toArrow()
+            for a, b in zip(table.column("a").to_pylist(),
+                            table.column("b").to_pylist()):
                 # node set from the raw (pre-self-loop-filter) edges so
                 # self-loop-only nodes are kept, matching the
                 # distributed path's contract
@@ -410,13 +420,23 @@ def _label_and_pick(form_counts: DataFrame, comp: DataFrame) -> DataFrame:
     return canon.select("entity_id", "canonical_text", "norm", "n_mentions")
 
 
+def _fits_broadcast(spark, rows: int, chars: int, bands: int) -> bool:
+    """True when an increment of ``rows`` new forms (``chars`` total
+    characters) fits spark.sql.autoBroadcastJoinThreshold in its widest
+    broadcast shape: the probe's band keys, ``bands`` rows per form of
+    ~40 fixed bytes plus the form itself. A threshold <= 0 (broadcast
+    disabled) never fits."""
+    limit = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    return 0 < bands * (40 * rows + chars) <= limit
+
+
 def merge_canonicalize(
     new_mentions: DataFrame,
     existing: DataFrame,
     jaccard_max_distance: float = 0.3,
     lsh_tables: int = 10,
     max_bucket_size: int | None = None,
-    broadcast_probe: bool = False,
 ) -> DataFrame:
     """INCREMENTAL canonicalization: fold a new crawl's mentions into an
     existing canonical table without re-pairing the accumulated
@@ -424,7 +444,9 @@ def merge_canonicalize(
 
     existing: the output of a prior canonicalize_mentions /
     merge_canonicalize run — (entity_id, canonical_text, norm,
-    n_mentions), one row per form. new_mentions: raw (.., text) rows.
+    n_mentions), one row per form — as a table scan or a checkpoint: it
+    is scanned several times. new_mentions: raw (.., text) rows,
+    evaluated once.
 
     Exact-equivalence contract (pytest-pinned):
     ``merge_canonicalize(new, canonicalize_mentions(old)) ==
@@ -446,12 +468,19 @@ def merge_canonicalize(
 
     At 10^12-document scale this is the difference between paying for
     |new| x |vocabulary| band collisions per crawl and re-verifying the
-    full |vocabulary|^2 candidate explosion; the accumulated table is
-    scanned map-side but never shuffled or re-clustered (CC and the
-    canonical re-pick are increment-sized; with ``broadcast_probe``
-    the band join's big side stays map-side too). Entity ids are
+    full |vocabulary|^2 candidate explosion. Entity ids are
     content-addressed (xxhash64 of the canonical surface), so clusters
     whose membership didn't change keep their ids across merges.
+
+    Physical shape: the new side's form counts are checkpointed once,
+    and their row count and characters are observed during that job.
+    When the increment fits spark.sql.autoBroadcastJoinThreshold
+    (_fits_broadcast), every increment-sized frame is broadcast, so the
+    accumulated table is only ever SCANNED map-side — streamed through
+    broadcast joins, never below a shuffle
+    (test_plans.py::test_incremental_fold_never_shuffles_accumulated_table
+    pins this on the executed plans). A larger increment (a whole crawl
+    wave) leaves join planning to the optimizer and AQE.
 
     CAPPED MODE IS NOT EXACT-EQUIVALENT: with ``max_bucket_size`` set,
     old connectivity still re-enters as star edges even when NEW forms
@@ -462,36 +491,42 @@ def merge_canonicalize(
     bucket), but it means capped merge output can differ from capped
     batch output; the divergence direction is pinned by
     test_merge_canonicalize_capped_keeps_old_clusters. Only the default
-    uncapped mode carries the row-for-row equivalence contract."""
-    m = normalize_mentions(new_mentions)
-    # same single-evaluation discipline as canonicalize_mentions: the
-    # new side's annotate lineage and the caller's existing-table
-    # lineage are each checkpointed ONCE (both frames are one row per
-    # form); merged / form_counts / truly_new / anchors all derive from
-    # these checkpoints, so no downstream action chain re-runs either
-    # upstream. This is the incremental path's value proposition — it
-    # must not pay the batch annotate cost repeatedly.
+    uncapped mode carries the row-for-row equivalence contract. The cap
+    counts band buckets with a window, which shuffles the band keys of
+    the accumulated side."""
+    from pyspark.sql import Observation
+
+    size = Observation()
     new_counts = (
-        m.groupBy("norm").agg(F.count("*").alias("n_new"))
+        normalize_mentions(new_mentions)
+        .groupBy("norm").agg(F.count("*").alias("n_new"))
+        .observe(size, F.count(F.lit(1)).alias("rows"),
+                 F.coalesce(F.sum(F.length("norm")), F.lit(0))
+                 .alias("chars"))
         .localCheckpoint()
     )
-    existing = existing.localCheckpoint()
-    # every join below keys the accumulated table against an
-    # increment-sized frame — with AQE on, the small side broadcasts
-    # and the accumulated vocabulary is only ever SCANNED map-side in
-    # this function, never shuffled (there is deliberately no full
-    # outer join, which would force both sides through an exchange)
-    matched = (
-        existing.select("norm")
-        .join(new_counts, "norm")
-        .localCheckpoint()  # count-updated existing forms (small)
+    observed = size.get
+    fits = _fits_broadcast(existing.sparkSession, observed["rows"],
+                           observed["chars"], lsh_tables)
+
+    def small(df):  # an increment-sized frame
+        return F.broadcast(df) if fits else df
+
+    old_norms = existing.select("norm")
+    # the increment's forms minus those already in the table: the hits
+    # come from streaming the table against the increment (semi join)
+    truly_new = (
+        new_counts.join(
+            small(old_norms.join(small(new_counts.select("norm")), "norm",
+                                 "left_semi")),
+            "norm", "left_anti")
+        .select("norm")
+        .localCheckpoint()
     )
-    truly_new = new_counts.join(matched, "norm", "left_anti").select("norm")
-    all_norms = existing.select("norm").unionByName(truly_new)
     pairs = lsh_candidate_pairs(
-        all_norms, jaccard_max_distance,
-        n_hashes=3 * lsh_tables, bands=lsh_tables, probe=truly_new,
-        max_bucket_size=max_bucket_size, broadcast_probe=broadcast_probe,
+        old_norms.unionByName(truly_new), jaccard_max_distance,
+        n_hashes=3 * lsh_tables, bands=lsh_tables, probe=small(truly_new),
+        max_bucket_size=max_bucket_size,
     ).localCheckpoint()
 
     # TOUCHED-COMPONENT restriction: only components that the increment
@@ -503,18 +538,21 @@ def merge_canonicalize(
     # vocabulary. Exact equivalence holds because an untouched
     # component has identical membership AND identical counts, so the
     # batch run's label/pick emits identical rows for it
-    # (content-addressed ids included).
+    # (content-addressed ids included). Semi joins replace distincts:
+    # duplicate keys on a semi join's build side change nothing.
     touch_forms = (
         pairs.select(F.col("a").alias("norm"))
-        .union(pairs.select(F.col("b").alias("norm")))
-        .union(matched.select("norm"))
-        .distinct()
+        .unionByName(pairs.select(F.col("b").alias("norm")))
+        .unionByName(new_counts.select("norm"))
     )
     touched_canon = (
-        existing.join(touch_forms, "norm")
-        .select("canonical_text").distinct().localCheckpoint()
+        existing.join(small(touch_forms), "norm", "left_semi")
+        .select("canonical_text").localCheckpoint()
     )
-    touched_members = existing.join(touched_canon, "canonical_text")
+    touched_members = (
+        existing.join(small(touched_canon), "canonical_text", "left_semi")
+        .select("norm", "canonical_text", "n_mentions").localCheckpoint()
+    )
     anchors = (
         touched_members.filter(F.col("norm") != F.col("canonical_text"))
         .select(F.col("norm").alias("a"),
@@ -531,7 +569,7 @@ def merge_canonicalize(
             "norm", F.col("n_mentions").alias("n_old"))
         .unionByName(
             truly_new.select("norm", F.lit(0).alias("n_old")))
-        .join(new_counts, "norm", "left")
+        .join(small(new_counts), "norm", "left")
         .select(
             "norm",
             (F.col("n_old")
@@ -540,7 +578,7 @@ def merge_canonicalize(
     )
     labeled_active = _label_and_pick(active_counts, comp)
     untouched = existing.join(
-        touched_canon, "canonical_text", "left_anti"
+        small(touched_canon), "canonical_text", "left_anti"
     ).select("entity_id", "canonical_text", "norm", "n_mentions")
     return labeled_active.unionByName(untouched)
 

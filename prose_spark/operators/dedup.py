@@ -135,7 +135,6 @@ def banded_minhash_pairs(
     hash_fn: str = "xxhash64",
     max_bucket_size: int | None = None,
     probe: DataFrame | None = None,
-    broadcast_probe: bool = False,
 ) -> DataFrame:
     """Core native banded-MinHash join: d(k, g: array of distinct
     shingles) -> (a, b, jaccard_dist) — no pyspark.ml, no model fit,
@@ -152,7 +151,11 @@ def banded_minhash_pairs(
        count); band keys bound partition sizes at any scale;
     4. shingle arrays re-attach to the deduped candidate pairs by key
        (each doc's array moves once per candidate side, not once per
-       band), then exact Jaccard verify + filter.
+       band), then exact Jaccard verify + filter (jaccard_verify).
+
+    Steps 1-3 are banded_pair_ids; a caller whose shingle set is a pure
+    function of the key (entity canonicalization) recomputes the arrays
+    on the pair rows instead of step 4's re-join.
 
     ``hash_fn``: 'xxhash64' (default, fastest JVM hash; band key is an
     xxhash64 chain) or 'md5' — the PORTABLE family (md5-derived 60-bit
@@ -181,6 +184,34 @@ def banded_minhash_pairs(
     restricted to those touching a probe key (identical hashing ⇒
     identical band collisions).
     """
+    pair_ids = banded_pair_ids(d, n_hashes, bands, hash_fn,
+                               max_bucket_size, probe)
+    pairs = (
+        pair_ids
+        .join(d.select(F.col("k").alias("a"), F.col("g").alias("ga")), "a")
+        .join(d.select(F.col("k").alias("b"), F.col("g").alias("gb")), "b")
+    )
+    return jaccard_verify(pairs, jaccard_max_distance)
+
+
+def banded_pair_ids(
+    d: DataFrame,
+    n_hashes: int,
+    bands: int,
+    hash_fn: str = "xxhash64",
+    max_bucket_size: int | None = None,
+    probe: DataFrame | None = None,
+) -> DataFrame:
+    """Steps 1-3 of banded_minhash_pairs: the DISTINCT band-collision
+    candidates (a, b), a < b, unverified. Same ``probe`` /
+    ``max_bucket_size`` contract.
+
+    A broadcast hint on ``probe`` carries through the band-key
+    projection to the probe join: the full side is then streamed
+    map-side and never shuffled. The probe path materializes its raw
+    candidates (ids only, probe-sized) before the distinct: the
+    distinct's exchange then reads the candidates, not a plan over the
+    full side's scan, so a retried shuffle stage never re-scans it."""
     banded = _banded_keys(d, n_hashes, bands, hash_fn)
     if probe is None:
         # the self-join consumes banded TWICE, and under the default
@@ -198,39 +229,32 @@ def banded_minhash_pairs(
             .filter(F.col("_bn") <= max_bucket_size)
             .drop("_bn")
         )
-    if probe is not None:
-        banded_probe = _banded_keys(probe, n_hashes, bands, hash_fn)
-        if broadcast_probe:
-            # incremental folds where the probe side is known small
-            # (one crawl increment vs an accumulated vocabulary): a
-            # broadcast hash join leaves the big banded side entirely
-            # map-side — the accumulated vocabulary's band keys are
-            # never shuffled. Caller's choice: a large increment must
-            # keep the shuffle join (band keys bound partition sizes).
-            banded_probe = F.broadcast(banded_probe)
-        pair_ids = (
-            banded_probe.alias("x")
-            .join(banded.alias("y"), ["band", "bkey"])
-            .filter(F.col("x.k") != F.col("y.k"))
-            .select(
-                F.least(F.col("x.k"), F.col("y.k")).alias("a"),
-                F.greatest(F.col("x.k"), F.col("y.k")).alias("b"),
-            )
-            .dropDuplicates(["a", "b"])
-        )
-    else:
-        pair_ids = (
+    if probe is None:
+        return (
             banded.alias("x")
             .join(banded.alias("y"), ["band", "bkey"])
             .filter(F.col("x.k") < F.col("y.k"))
             .select(F.col("x.k").alias("a"), F.col("y.k").alias("b"))
             .dropDuplicates(["a", "b"])
         )
-    pairs = (
-        pair_ids
-        .join(d.select(F.col("k").alias("a"), F.col("g").alias("ga")), "a")
-        .join(d.select(F.col("k").alias("b"), F.col("g").alias("gb")), "b")
+    return (
+        _banded_keys(probe, n_hashes, bands, hash_fn).alias("x")
+        .join(banded.alias("y"), ["band", "bkey"])
+        .filter(F.col("x.k") != F.col("y.k"))
+        .select(
+            F.least(F.col("x.k"), F.col("y.k")).alias("a"),
+            F.greatest(F.col("x.k"), F.col("y.k")).alias("b"),
+        )
+        .localCheckpoint()
+        .dropDuplicates(["a", "b"])
     )
+
+
+def jaccard_verify(pairs: DataFrame,
+                   jaccard_max_distance: float) -> DataFrame:
+    """pairs(a, b, ga, gb: distinct-shingle arrays) -> (a, b,
+    jaccard_dist), keeping the pairs within the exact Jaccard distance
+    threshold (the verify step of banded_minhash_pairs)."""
     inter = F.size(F.array_intersect("ga", "gb"))
     union = F.size(F.array_union("ga", "gb"))
     return (

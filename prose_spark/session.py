@@ -46,3 +46,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# applicationId -> whether the Iceberg runtime is on the JVM classpath
+_ICEBERG_ON_CLASSPATH: dict[str, bool] = {}
+
+
+def iceberg_on_classpath(spark: SparkSession) -> bool:
+    """True when the Iceberg Spark runtime is on the driver's classpath.
+    A resource lookup returns null instead of throwing (a Class.forName
+    probe costs a Java exception plus its PySpark conversion, ~60 ms, on
+    every call), and the answer is cached per application: the
+    classpath does not change while the JVM lives."""
+    app = spark.sparkContext.applicationId
+    if app not in _ICEBERG_ON_CLASSPATH:
+        loader = spark._jvm.org.apache.spark.util.Utils \
+            .getContextOrSparkClassLoader()
+        _ICEBERG_ON_CLASSPATH[app] = loader.getResource(
+            "org/apache/iceberg/spark/SparkCatalog.class") is not None
+    return _ICEBERG_ON_CLASSPATH[app]

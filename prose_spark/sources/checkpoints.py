@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from prose_spark import __version__
+from prose_spark.session import iceberg_on_classpath
 
 DONE_SCHEMA = T.StructType(
     [
@@ -106,11 +107,7 @@ def iceberg_available(spark: SparkSession) -> bool:
     catalog is configured to use it — the capability check gating the
     production sink (this sandbox image has neither, so the parquet
     fallback runs)."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-    except Exception:
+    if not iceberg_on_classpath(spark):
         return False
     pairs = spark.sparkContext.getConf().getAll()
     return any(
@@ -362,6 +359,16 @@ def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/triples")
 
 
+# one row per normalized surface form (canonicalize.py); a fixed read
+# schema spares every read of the table a footer-inference job
+CANON_SCHEMA = T.StructType([
+    T.StructField("entity_id", T.LongType()),
+    T.StructField("canonical_text", T.StringType()),
+    T.StructField("norm", T.StringType()),
+    T.StructField("n_mentions", T.LongType()),
+])
+
+
 def update_canonical_tables(
     spark: SparkSession,
     out_dir: str,
@@ -379,11 +386,12 @@ def update_canonical_tables(
     is never re-paired against itself, which at crawl scale is the
     difference between |new| x |vocab| band collisions per increment and
     a full |vocab|^2 re-canonicalization (canonicalize.py
-    merge_canonicalize docstring). A missing or empty existing table
-    falls back to the batch path. Uncapped incremental output is
-    row-for-row equal to a batch run over the union (the pytest-pinned
-    merge contract); capped mode keeps committed clusters stable by
-    design.
+    merge_canonicalize docstring). A missing existing table falls back
+    to the batch path (an empty one folds like any other: the merge
+    over no existing forms is the batch result over the increment).
+    Uncapped incremental output is row-for-row equal to a batch run over
+    the union (the pytest-pinned merge contract); capped mode keeps
+    committed clusters stable by design.
 
     The canonical-TRIPLES projection is always rebuilt over the full
     triples table: entity ids are content-addressed on the canonical
@@ -393,8 +401,11 @@ def update_canonical_tables(
     re-run), linear in triples with no shuffle skew from hot entities.
 
     Returns ``{"path": "batch"|"incremental"|"noop", "n_forms": int,
-    "n_canon_triples": int}``.
+    "n_canon_triples": int}``; the counts are observed during the
+    writes.
     """
+    from pyspark.sql import Observation
+
     from prose_spark.operators.canonicalize import (
         canonicalize_mentions,
         merge_canonicalize,
@@ -408,9 +419,7 @@ def update_canonical_tables(
     existing = None
     if incremental:
         try:
-            existing = spark.read.parquet(canon_path)
-            if not existing.head(1):
-                existing = None
+            existing = spark.read.schema(CANON_SCHEMA).parquet(canon_path)
         except AnalysisException:
             existing = None
 
@@ -434,15 +443,14 @@ def update_canonical_tables(
         new_mentions = new_triples.select(
             F.col("subj").alias("text")
         ).unionAll(new_triples.select(F.col("obj").alias("text")))
+        # materialize BEFORE overwriting the parquet the merge reads:
+        # its output lineage scans canon_path (the accumulated table is
+        # never copied into the fold), so writing the lazy result over
+        # that path would fail. The checkpoint also feeds the triples
+        # rebuild below without a re-read.
         canon = merge_canonicalize(
             new_mentions, existing, max_bucket_size=max_bucket_size
-        )
-        # materialize BEFORE overwriting the parquet the merge read
-        # from: merge_canonicalize localCheckpoints `existing`, so the
-        # output lineage already cannot re-read canon_path, but the
-        # table is one row per form — pinning that invariant here is
-        # cheap and survives future lineage changes
-        canon = canon.localCheckpoint()
+        ).localCheckpoint()
         path_taken = "incremental"
     else:
         mentions = triples.select(
@@ -453,33 +461,38 @@ def update_canonical_tables(
         )
         path_taken = "batch"
 
-    if path_taken != "noop":
-        canon.write.mode("overwrite").parquet(canon_path)
-        canon = spark.read.parquet(canon_path)
+    if path_taken == "noop":
+        n_forms = canon.count()
+    else:
+        forms = Observation()
+        canon.observe(forms, F.count(F.lit(1)).alias("n")) \
+            .write.mode("overwrite").parquet(canon_path)
+        n_forms = forms.get["n"]
+        if path_taken == "batch":
+            canon = spark.read.schema(CANON_SCHEMA).parquet(canon_path)
 
     # join surfaces through the SAME normalization that built the
     # canonical table (plain lower() would never match punctuated
     # surfaces like "Acme Corp."); the canonical table is small ->
-    # broadcast, so hot entities cause no shuffle skew
-    canon_triples = (
+    # broadcast, so hot entities cause no shuffle skew. norm is unique
+    # in it, and both joins use the SAME frame, so one broadcast serves
+    # both.
+    ids = F.broadcast(canon.select("norm", "entity_id"))
+    subj, obj = ids.alias("s"), ids.alias("o")
+    written = Observation()
+    (
         triples
-        .withColumn("subj_norm_key", norm_col("subj"))
-        .withColumn("obj_norm_key", norm_col("obj"))
-        .join(
-            F.broadcast(canon.selectExpr(
-                "norm AS subj_norm", "entity_id AS subj_id").distinct()),
-            F.col("subj_norm_key") == F.col("subj_norm"), "left")
-        .join(
-            F.broadcast(canon.selectExpr(
-                "norm AS obj_norm", "entity_id AS obj_id").distinct()),
-            F.col("obj_norm_key") == F.col("obj_norm"), "left")
-        .select("subj_id", "pred_norm", "obj_id", "url", "confidence")
+        .join(subj, norm_col("subj") == F.col("s.norm"), "left")
+        .join(obj, norm_col("obj") == F.col("o.norm"), "left")
+        .select(F.col("s.entity_id").alias("subj_id"), "pred_norm",
+                F.col("o.entity_id").alias("obj_id"), "url", "confidence")
+        .observe(written, F.count(F.lit(1)).alias("n"))
+        .write.mode("overwrite").parquet(triples_path)
     )
-    canon_triples.write.mode("overwrite").parquet(triples_path)
     return {
         "path": path_taken,
-        "n_forms": canon.count(),
-        "n_canon_triples": spark.read.parquet(triples_path).count(),
+        "n_forms": n_forms,
+        "n_canon_triples": written.get["n"],
     }
 
 

@@ -27,6 +27,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from prose_spark.schemas import PAGES_SCHEMA
+from prose_spark.session import iceberg_on_classpath
 
 REF_TESTDATA = Path("/root/reference/testdata")
 
@@ -182,9 +183,9 @@ def write_pages_parquet(spark: SparkSession, path: str, n_docs: int,
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Production shape: Iceberg table with partition pruning; parquet
-    fallback in this image (no Iceberg jars)."""
-    try:
+    """Production shape: Iceberg table with partition pruning when the
+    Iceberg runtime is on the classpath (its errors propagate); parquet
+    otherwise."""
+    if iceberg_on_classpath(spark):
         return spark.read.format("iceberg").load(path)
-    except Exception:
-        return spark.read.parquet(path)
+    return spark.read.parquet(path)

@@ -250,3 +250,112 @@ def test_linguistic_gate_all_jvm(spark):
     assert gated.columns == ["url", "text"]
     plan = gated._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "ArrowEvalPython" not in plan
+
+
+class _PlanRecorder:
+    """QueryExecutionListener (a py4j callback) that keeps the executed
+    plan of every successful action."""
+
+    def __init__(self):
+        self.plans = []
+
+    def onSuccess(self, func_name, qe, duration_ns):  # noqa: N802
+        self.plans.append(qe.executedPlan())
+
+    def onFailure(self, func_name, qe, exception):  # noqa: N802
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _descendants(node):
+    """Every physical node below ``node``, looking through adaptive
+    plans, query stages and reused exchanges."""
+    for child in _children(node):
+        yield child
+        yield from _descendants(child)
+
+
+def _children(node) -> list:
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [node.plan()]
+    if cls == "ReusedExchangeExec":
+        return [node.child()]
+    return _seq(node.children())
+
+
+def _scans_table(node, table: str) -> bool:
+    return (node.getClass().getSimpleName() == "FileSourceScanExec"
+            and table in node.relation().location().rootPaths()
+            .mkString(","))
+
+
+@pytest.fixture(scope="module")
+def kg_before_fold(spark, kg_pages_df, tmp_path_factory):
+    """A KG whose first two buckets are canonicalized, with two more
+    buckets written but not yet folded in."""
+    from prose_spark.sources.checkpoints import (
+        done_buckets,
+        run_kg_job,
+        update_canonical_tables,
+    )
+
+    out = str(tmp_path_factory.mktemp("fold") / "kg")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_kg_job(spark, kg_pages_df, out, n_buckets=4, fail_after_bucket=1)
+    first = done_buckets(spark, out)
+    update_canonical_tables(spark, out, new_buckets=first, incremental=True)
+    metrics = run_kg_job(spark, kg_pages_df, out, n_buckets=4)
+    return out, {r.bucket for r in metrics.collect()}
+
+
+@pytest.mark.parametrize("threshold, shuffled", [(None, False), ("-1", True)])
+def test_incremental_fold_never_shuffles_accumulated_table(
+        spark, kg_before_fold, tmp_path, threshold, shuffled):
+    """With an increment under spark.sql.autoBroadcastJoinThreshold the
+    fold only streams the accumulated entities_canonical table through
+    broadcast joins: no ShuffleExchangeExec of any executed plan has a
+    scan of it below. With broadcasting disabled the optimizer plans
+    shuffle joins, which shows the check can see such a shuffle."""
+    import shutil
+
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    from prose_spark.sources.checkpoints import update_canonical_tables
+
+    src, new_buckets = kg_before_fold
+    out = str(tmp_path / "kg")
+    shutil.copytree(src, out)
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    recorder = _PlanRecorder()
+    listeners = spark._jsparkSession.listenerManager()
+    listeners.register(recorder)
+    if threshold is not None:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    try:
+        stats = update_canonical_tables(
+            spark, out, new_buckets=new_buckets, incremental=True)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        listeners.unregister(recorder)
+    assert stats["path"] == "incremental"
+
+    table = "entities_canonical"
+    nodes = [n for p in recorder.plans for n in [p, *_descendants(p)]]
+    assert any(_scans_table(n, table) for n in nodes)
+    shuffles_of_table = [
+        n for n in nodes
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and any(_scans_table(d, table) for d in _descendants(n))
+    ]
+    assert bool(shuffles_of_table) == shuffled, [
+        n.toString() for n in shuffles_of_table]

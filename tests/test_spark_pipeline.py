@@ -55,6 +55,28 @@ def test_iceberg_sink_dispatch(spark, pages_df, tmp_path):
                    n_buckets=2, iceberg_table="cat.db.triples")
 
 
+def test_read_pages_probes_iceberg_once_without_raising(spark, tmp_path,
+                                                       monkeypatch):
+    """read_pages picks Iceberg or parquet from a classpath lookup that
+    returns instead of raising and is cached per application: without
+    the Iceberg runtime it reads parquet, and once Iceberg is taken as
+    present its failure propagates instead of silently falling back."""
+    from prose_spark import session
+    from prose_spark.sources.pages import read_pages
+
+    path = str(tmp_path / "pages")
+    spark.createDataFrame([("u1", "some text")], ["url", "text"]) \
+        .write.parquet(path)
+    assert [tuple(r) for r in read_pages(spark, path).collect()] == [
+        ("u1", "some text")]
+    app = spark.sparkContext.applicationId
+    assert session._ICEBERG_ON_CLASSPATH[app] is False
+    # the cached answer decides the next read: no second probe
+    monkeypatch.setitem(session._ICEBERG_ON_CLASSPATH, app, True)
+    with pytest.raises(Exception, match="data source: iceberg"):
+        read_pages(spark, path)
+
+
 def test_iceberg_sink_create_vs_overwrite_dispatch(monkeypatch, spark):
     # `spark` is unused by the fakes but REQUIRED: the create branch
     # builds F.col("bucket"), which asserts an active SparkContext in
@@ -166,6 +188,44 @@ def test_canonicalize_clusters_near_duplicates(spark):
     assert by_norm["acme corporatio"].canonical_text == "acme corporation"
     # exact variants collapsed into one normalized form with count 4
     assert by_norm["acme corporation"].n_mentions == 4
+
+
+def test_lsh_candidate_pairs_equal_exact_jaccard(spark):
+    """lsh_candidate_pairs returns exactly the form pairs within the
+    char-3-gram Jaccard threshold (brute force here): its verify drops
+    the band collisions beyond it, on the self-join and on the probe
+    join, which keeps only pairs touching a probe form."""
+    import itertools
+
+    from prose_spark.operators.canonicalize import (
+        _char_grams,
+        lsh_candidate_pairs,
+    )
+    from prose_spark.operators.dedup import banded_pair_ids
+
+    forms = ["acme corporation", "acme corporatio", "acme corp", "acme co",
+             "acme industries", "stark industries", "stark industry",
+             "globex", "globex inc", "globex incorporated", "initech",
+             "initech ltd", "alice johnson", "alice jonson", "alice johns",
+             "robert chen", "robert cheng", "roberta chen"]
+
+    def dist(a, b):
+        ga, gb = ({s[i:i + 3] for i in range(len(s) - 2)} for s in (a, b))
+        return 1 - len(ga & gb) / len(ga | gb)
+
+    exact = {tuple(sorted(p)) for p in itertools.combinations(forms, 2)
+             if dist(*p) <= 0.3}
+    df = spark.createDataFrame([(f,) for f in forms], ["norm"])
+    keyed = df.select(F.col("norm").alias("k"),
+                      _char_grams("norm").alias("g"))
+    candidates = {(r.a, r.b)
+                  for r in banded_pair_ids(keyed, 30, 10).collect()}
+    assert any(dist(a, b) > 0.3 for a, b in candidates)
+    assert {(r.a, r.b) for r in lsh_candidate_pairs(df).collect()} == exact
+    probe = {"acme corp", "robert cheng", "initech"}
+    got = {(r.a, r.b) for r in lsh_candidate_pairs(
+        df, probe=df.filter(F.col("norm").isin(*probe))).collect()}
+    assert got and got == {p for p in exact if probe & set(p)}
 
 
 def test_connected_components_chain(spark):
@@ -347,7 +407,24 @@ def test_checkpoint_resume_after_crash(spark, pages_df, tmp_path):
     assert run_kg_job(spark, pages_df, out, n_buckets=4).count() == 0
 
 
-def test_incremental_canonical_resume(spark, pages_df, tmp_path):
+@pytest.fixture
+def broadcast_threshold(spark, request):
+    """Runs a test under the session's broadcast threshold (None) or
+    another one ("-1" disables broadcasting), restoring it after."""
+    if request.param is not None:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", request.param)
+    yield request.param
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+# both sides of merge_canonicalize's broadcast decision
+BOTH_JOIN_SHAPES = pytest.mark.parametrize(
+    "broadcast_threshold", [None, "-1"], indirect=True)
+
+
+@BOTH_JOIN_SHAPES
+def test_incremental_canonical_resume(spark, kg_pages_df, tmp_path,
+                                      broadcast_threshold):
     """Marker-driven re-canonicalization (r5 verdict item #7): a job
     crashes mid-run after canonicalizing its completed buckets; the
     resumed run folds ONLY the newly-finished buckets into the existing
@@ -363,7 +440,7 @@ def test_incremental_canonical_resume(spark, pages_df, tmp_path):
 
     out = str(tmp_path / "kg_out")
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_kg_job(spark, pages_df, out, n_buckets=4, fail_after_bucket=1)
+        run_kg_job(spark, kg_pages_df, out, n_buckets=4, fail_after_bucket=1)
     done_first = done_buckets(spark, out)
     # crash-run canonicalization over the completed buckets: no prior
     # table -> batch fallback
@@ -376,7 +453,7 @@ def test_incremental_canonical_resume(spark, pages_df, tmp_path):
     }
 
     # resume: remaining buckets fold in incrementally
-    metrics = run_kg_job(spark, pages_df, out, n_buckets=4)
+    metrics = run_kg_job(spark, kg_pages_df, out, n_buckets=4)
     new_b = {r.bucket for r in metrics.collect()}
     assert new_b == {0, 1, 2, 3} - done_first
     s2 = update_canonical_tables(
@@ -403,7 +480,7 @@ def test_incremental_canonical_resume(spark, pages_df, tmp_path):
     assert surviving, "no stage-1 entity ids survived the increment"
 
     # fully-resumed third run: nothing new -> noop, table untouched
-    assert run_kg_job(spark, pages_df, out, n_buckets=4).count() == 0
+    assert run_kg_job(spark, kg_pages_df, out, n_buckets=4).count() == 0
     s4 = update_canonical_tables(
         spark, out, new_buckets=set(), incremental=True)
     assert s4["path"] == "noop"
@@ -456,7 +533,9 @@ def test_done_marker_input_fingerprint_lineage(spark, pages_df, tmp_path):
     assert set(fd) == set(fe) and all(fd[b] != fe[b] for b in fd)
 
 
-def test_merge_canonicalize_equals_batch(spark, pages_df):
+@BOTH_JOIN_SHAPES
+def test_merge_canonicalize_equals_batch(spark, kg_pages_df,
+                                        broadcast_threshold):
     """The incremental path's exact-equivalence contract:
     merge_canonicalize(new, canonicalize_mentions(old)) reproduces
     canonicalize_mentions(old UNION new) ROW FOR ROW on real NER
@@ -464,7 +543,9 @@ def test_merge_canonicalize_equals_batch(spark, pages_df):
     finds exactly the batch run's new-touching pairs, and old
     connectivity re-enters as star edges whose closure is the old
     partition. Also checks id stability: clusters untouched by the new
-    crawl keep their entity_id."""
+    crawl keep their entity_id. Runs with the increment broadcast and
+    with broadcasting disabled: the join strategy must not change a
+    row."""
     from prose_spark.operators.annotate import annotate
     from prose_spark.operators.canonicalize import (
         canonicalize_mentions,
@@ -473,7 +554,7 @@ def test_merge_canonicalize_equals_batch(spark, pages_df):
     )
 
     ann = annotate(
-        pages_df.filter(F.col("lang") == "en").select("url", "text")
+        kg_pages_df.filter(F.col("lang") == "en").select("url", "text")
     )
     m = mentions_from_annotated(ann, key_col="url").localCheckpoint()
     old = m.filter(F.pmod(F.xxhash64("url"), F.lit(3)) != 0)
@@ -484,12 +565,6 @@ def test_merge_canonicalize_equals_batch(spark, pages_df):
     batch = sorted(map(tuple, canonicalize_mentions(m).collect()))
     inc = sorted(map(tuple, merge_canonicalize(new, existing).collect()))
     assert inc == batch
-    # broadcast_probe changes ONLY the physical join strategy (probe
-    # band keys broadcast, accumulated side never shuffled) — the pair
-    # set and therefore the output must be identical
-    inc_bp = sorted(map(tuple, merge_canonicalize(
-        new, existing, broadcast_probe=True).collect()))
-    assert inc_bp == batch
 
     # id stability: every cluster whose canonical surface survived the
     # merge kept its content-addressed entity_id
@@ -1070,6 +1145,28 @@ def test_connected_components_gate_is_byte_aware(spark):
         stats=stats3,
     ).collect()
     assert stats3["path"] == "distributed", stats3
+
+
+def test_connected_components_gate_bounds_rows_near_cap(spark):
+    """The gate charges every raw row its driver-side cost, not only its
+    id characters: a duplicate-heavy edge list of 1-char ids whose row
+    count puts it one row over driver_max_bytes takes the distributed
+    path, one row under stays local, and both label alike."""
+    from prose_spark.operators import canonicalize as canon
+
+    cap = 100 << 10
+    under = cap // (canon._DRIVER_ROW_BYTES + 2)  # 2 id chars per row
+    labels = {}
+    for n_rows, path in ((under, "local"), (under + 1, "distributed")):
+        edges = spark.createDataFrame(
+            [("a", "b")] * (n_rows - 1) + [("b", "c")], ["a", "b"])
+        stats: dict = {}
+        labels[path] = {(r.node, r.comp) for r in canon.connected_components(
+            edges, driver_threshold=10, driver_max_bytes=cap,
+            stats=stats).collect()}
+        assert stats["path"] == path, (n_rows, stats)
+    assert labels["local"] == labels["distributed"] == {
+        ("a", "a"), ("b", "a"), ("c", "a")}
 
 
 def _counting_mentions(spark, rows, acc):
