@@ -75,7 +75,6 @@ class _Reader:
 
 # builtin type ids (gob/type.go, public)
 T_BOOL, T_INT, T_UINT, T_FLOAT, T_BYTES, T_STRING = 1, 2, 3, 4, 5, 6
-T_COMPLEX, T_INTERFACE = 7, 8
 
 
 @dataclass

@@ -129,14 +129,3 @@ def normalize_text(text: str, lang: str) -> str:
         return "".join(ch for ch in decomposed
                        if unicodedata.category(ch) != "Mn")
     return text
-
-
-def annotate_multilingual(text: str, cfg=None):
-    """NewMultilingualDocument equivalent (multilingual.go:403-423):
-    detect -> annotate; returns (lang, confidence, sentences, tokens,
-    entities)."""
-    from prose_spark.operators.annotate import AnnotateConfig, annotate_document
-
-    lang, conf = detect_language(text)
-    sents, toks, ents = annotate_document(text, cfg or AnnotateConfig())
-    return lang, conf, sents, toks, ents

@@ -156,12 +156,6 @@ def _enwords() -> frozenset[str]:
     return _ENWORDS
 
 
-# the 14 features whose values don't depend on label history
-_STATIC = (
-    "bias", "en-wordlist", "nextpos", "nextword", "pos", "prefix3",
-    "prevpos", "prevword", "shape", "suffix3", "word", "word+nextpos",
-    "word.lower", "wordlen",
-)
 _HISTORY_DOMAIN = ("None", "B", "I", "O", "v")
 
 

@@ -470,7 +470,3 @@ def default_segmenter() -> PunktSegmenter:
             )
         )
     return _DEFAULT
-
-
-def segment_with_offsets(text: str) -> list[tuple[str, int, int]]:
-    return default_segmenter().segment(text)

@@ -614,7 +614,7 @@ class PerceptronTagger:
         HMM taggers, softened: the training corpus is small, so a valid
         tag can be missing from a word's seen set and strong context
         must stay able to override). The default comes from the r7
-        held-out grid (scripts/tagger_oov_experiment.py penalty):
+        held-out treebank grid over the penalty:
         0.25/0.5/1/2/4/8 -> 0.9582/0.9586/0.9598/0.9610/0.9625/0.9636,
         saturating at 8.0 (12/16/32/1e6 all read 0.9636) — the dict is
         near-reliable, but 8.0 keeps an escape hatch for extreme

@@ -44,16 +44,6 @@ from dataclasses import dataclass, field
 
 INTERNAL_RE = re.compile(rb"^(?:[A-Za-z]\.){2,}$|^[A-Z][a-z]{1,2}\.$")
 
-# Applied in one left-to-right pass, longest-match-at-position (Go
-# strings.Replacer semantics; these patterns never overlap in practice).
-SANITIZER = (
-    ("“", '"'),
-    ("”", '"'),
-    ("‘", "'"),
-    ("’", "'"),
-    ("&rsquo;", "'"),
-)
-
 CONTRACTIONS = ("'ll", "'s", "'re", "'m", "n't")
 SUFFIXES = (",", ")", '"', "]", "!", ";", ".", "?", ":", "'")
 PREFIXES = ("$", "(", '"', "[")

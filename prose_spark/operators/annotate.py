@@ -21,11 +21,11 @@ Scale notes:
 
 from __future__ import annotations
 
+import logging
 import time
 from dataclasses import dataclass
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -60,9 +60,7 @@ class AnnotateConfig:
       custom kernels for local use — e.g. a PRODUCT-trained MaxentNER;
     - ``ner_path``: UsingModel by artifact path, resolved lazily inside
       each Spark worker (keeps multi-MB weight matrices out of task
-      closures; loaded once per worker process);
-    - ``language`` (WithLanguage): metadata only — like the reference,
-      the English kernels run regardless.
+      closures; loaded once per worker process).
 
     TokenPool (WithTokenPool) is n/a under Arrow batching.
     """
@@ -77,31 +75,54 @@ class AnnotateConfig:
     tagger: object | None = None
     ner: object | None = None
     ner_path: str | None = None
-    language: str = "en"
+
+
+# plan nodes that carry a layout the caller chose; Project and Filter
+# above one keep it (both are map-side)
+_LAYOUT_NODES = frozenset(("Repartition", "RepartitionByExpression",
+                           "InMemoryRelation"))
+_PASS_THROUGH_NODES = frozenset(("Project", "Filter"))
+_log = logging.getLogger("prose_spark")
+_spread_warned = False
+
+
+def _caller_chose_layout(df: DataFrame) -> bool:
+    """True when the optimized plan's top node, looking through Project
+    and Filter, is a Repartition (``repartition``/``coalesce``), a
+    RepartitionByExpression or a cached InMemoryRelation."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.getClass().getSimpleName() in _PASS_THROUGH_NODES:
+        node = node.child()
+    return node.getClass().getSimpleName() in _LAYOUT_NODES
 
 
 def spread_compute_input(df: DataFrame) -> DataFrame:
     """Repartition a compute-bound stage's input to the session's
-    parallelism when it arrives under-partitioned FROM A SCAN — a small
-    parquet input loads as 1-2 byte-split partitions and would serialize
-    the Python kernel onto 1-2 cores (AQE coalesces by BYTES and cannot
-    see compute weight).
+    parallelism when it arrives under-partitioned — a small parquet
+    input loads as 1-2 byte-split partitions and would serialize the
+    Python kernel onto 1-2 cores (AQE coalesces by BYTES and cannot see
+    compute weight).
 
-    Deliberately honors the caller's partitioning: if the plan carries
-    an explicit Repartition/Coalesce or a cached (InMemoryRelation)
-    frame, the caller chose that layout — e.g. a concurrency-controlled
-    measurement leg or a co-location contract — and the spread must not
-    override it. At scale inputs carry enough partitions and this whole
-    function is a no-op."""
+    Deliberately honors the caller's partitioning: if the plan's top
+    node (through Project/Filter) is an explicit Repartition/Coalesce
+    or a cached (InMemoryRelation) frame, the caller chose that layout
+    — e.g. a concurrency-controlled measurement leg or a co-location
+    contract — and the spread must not override it. A layout buried
+    under a join, union or aggregate no longer sets the partition
+    count, so such inputs are spread. At scale inputs carry enough
+    partitions and this whole function is a no-op."""
+    global _spread_warned
     p = df.sparkSession.sparkContext.defaultParallelism
     try:
-        if df.rdd.getNumPartitions() >= p:
-            return df
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        if ("Repartition" in plan or "Coalesce" in plan
-                or "InMemoryRelation" in plan):
+        if df.rdd.getNumPartitions() >= p or _caller_chose_layout(df):
             return df
     except Exception:
+        # the spread is an optimization: a plan it cannot read keeps the
+        # caller's partitioning instead of failing the job
+        if not _spread_warned:
+            _spread_warned = True
+            _log.warning("input spread skipped: cannot inspect the plan; "
+                         "the input keeps its partitioning", exc_info=True)
         return df
     return df.repartition(p)
 
@@ -257,8 +278,8 @@ def annotate(
     indistinguishable from a genuinely empty one. ``timeout_acc``: an
     optional ``spark.sparkContext.accumulator(0)`` incremented once per
     timed-out document, for job-level counts across all partitions."""
-    # compute-bound Python stage: spread an under-partitioned SCAN input
-    # to the session's parallelism (explicit caller partitioning is
+    # compute-bound Python stage: spread an under-partitioned input to
+    # the session's parallelism (explicit caller partitioning is
     # honored — see spread_compute_input)
     df = spread_compute_input(df)
 

@@ -8,8 +8,7 @@ Pipeline:
    shingles (exact Jaccard distance <= threshold after band blocking;
    operators.dedup.banded_minhash_pairs). Banding turns the O(n^2)
    similarity join into an equi-join on band keys — the only shuffle
-   whose size matters at 10^12-document scale; a pyspark.ml
-   MinHashLSH cross-check variant is kept as lsh_candidate_pairs_ml;
+   whose size matters at 10^12-document scale;
 3. connected components over the edge set by alternating small-star /
    large-star label propagation (Kiveris et al., "Connected Components in
    MapReduce and Beyond") expressed as DataFrame self-joins, with
@@ -110,38 +109,6 @@ def lsh_candidate_pairs(
         "a", "b", _char_grams("a").alias("ga"), _char_grams("b").alias("gb")
     )
     return jaccard_verify(pairs, jaccard_max_distance).select("a", "b")
-
-
-def lsh_candidate_pairs_ml(
-    forms: DataFrame,
-    jaccard_max_distance: float = 0.3,
-    num_hash_tables: int = 6,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """pyspark.ml MinHashLSH variant of lsh_candidate_pairs (kept for
-    cross-checking the native core against Spark ML's approxSimilarityJoin;
-    same true-Jaccard threshold semantics via keyDistance)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    shingled = forms.withColumn("grams", _char_grams("norm"))
-    tf = HashingTF(inputCol="grams", outputCol="features",
-                   numFeatures=num_features)
-    feats = tf.transform(shingled)
-    # zero vectors (empty grams) break MinHash; norms are non-empty so grams
-    # always has >= 1 element
-    mh = MinHashLSH(inputCol="features", outputCol="hashes",
-                    numHashTables=num_hash_tables, seed=42)
-    model = mh.fit(feats)
-    pairs = model.approxSimilarityJoin(
-        feats, feats, jaccard_max_distance, distCol="dist"
-    )
-    return (
-        pairs.select(
-            F.col("datasetA.norm").alias("a"), F.col("datasetB.norm").alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
 
 
 def _edge_checksum(e: DataFrame) -> tuple[int, int]:

@@ -19,7 +19,7 @@ import hashlib
 from contextlib import contextmanager
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # Mersenne prime 2^31-1 for the portable minhash rehash family: products
@@ -30,15 +30,6 @@ _P31 = 2147483647
 
 def _norm(text_col: str):
     return F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-
-
-def md5_long60(c: Column) -> Column:
-    """Portable 60-bit hash both engines compute identically: the first
-    15 hex chars of md5 parsed as an integer (always < 2^60, so it fits a
-    signed 64-bit long without overflow on either side).
-    Spark:  conv(substring(md5(x),1,15),16,10)::long
-    DuckDB: ('0x' || substr(md5(x),1,15))::BIGINT"""
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def minhash_salts(n_hashes: int) -> tuple[list[int], list[int]]:
@@ -266,7 +257,7 @@ def jaccard_verify(pairs: DataFrame,
     )
 
 
-# worker-local shingle -> (md5_long60 % P31) memo: shingle vocabularies
+# worker-local shingle -> (60-bit md5 prefix % P31) memo: shingle vocabularies
 # are Zipfian across documents, so repeated shingles skip the md5
 _MD5_SHINGLE_MEMO: dict[str, int] = {}
 

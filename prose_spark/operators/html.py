@@ -48,12 +48,3 @@ def extract_text(blob: bytes) -> str:
 @F.pandas_udf(T.StringType())
 def html_to_text(blobs: pd.Series) -> pd.Series:
     return blobs.map(extract_text)
-
-
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
-    """Fill ``out_col`` from ``html_col`` where missing (coalesce keeps an
-    existing text column authoritative)."""
-    extracted = html_to_text(F.col(html_col))
-    if out_col in df.columns:
-        return df.withColumn(out_col, F.coalesce(F.col(out_col), extracted))
-    return df.withColumn(out_col, extracted)

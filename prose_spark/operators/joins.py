@@ -8,8 +8,7 @@ carry-forward — one shuffle on (key), no range explosion:
     (ts, side) -> last non-null right value seen so far -> keep left rows.
 
 This scales to arbitrarily large sides (contrast with per-group
-``pd.merge_asof`` in applyInPandas, which needs a whole group in memory —
-provided here as the small-group alternative).
+``pd.merge_asof`` in applyInPandas, which needs a whole group in memory).
 """
 
 from __future__ import annotations
@@ -60,84 +59,4 @@ def asof_join(
     return (
         out.filter(F.col("_side") == 1)
         .select(*lcols, *[c + suffix for c in right_value_cols])
-    )
-
-
-def asof_join_grouped(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    ts: str = "ts",
-    right_value_cols: tuple[str, ...] = ("value",),
-    suffix: str = "_asof",
-) -> DataFrame:
-    """Grouped-map alternative: cogroup + pd.merge_asof per key. Simpler
-    semantics, but each key's rows must fit one executor's memory — use
-    ``asof_join`` (window carry-forward) when groups can be huge."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [
-            T.StructField(
-                c + suffix, dict(zip(right.columns, right.schema.fields))[c].dataType
-            )
-            for c in right_value_cols
-        ]
-    )
-    lcols = left.columns
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        out_cols = [f.name for f in out_schema.fields]
-        if l_pdf.empty:
-            return pd.DataFrame(columns=out_cols)
-        l_pdf = l_pdf.sort_values(ts)
-        if r_pdf.empty:
-            for c in right_value_cols:
-                l_pdf[c + suffix] = None
-            return l_pdf[out_cols]
-        r_pdf = (
-            r_pdf[[ts, *right_value_cols]]
-            .rename(columns={c: c + suffix for c in right_value_cols})
-            .sort_values(ts)
-        )
-        merged = pd.merge_asof(l_pdf, r_pdf, on=ts, direction="backward")
-        return merged[out_cols]
-
-    return (
-        left.groupBy(on)
-        .cogroup(right.groupBy(on))
-        .applyInPandas(merge, schema=out_schema)
-    )
-
-
-def salted_agg(
-    df: DataFrame,
-    key_col: str,
-    agg_exprs: dict[str, str],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for skewed keys: salt the key, partial-agg on
-    (key, salt), then final-agg on key. Decomposable aggregates only
-    (count/sum/min/max). At 100 TB a handful of hot keys (boilerplate
-    mentions, empty docs) would otherwise pin single reducers.
-
-    agg_exprs: {column: one of count|sum|min|max}.
-    """
-    salted = df.withColumn(
-        "_salt", (F.rand(seed=42) * n_salts).cast("int")
-    )
-    partial = salted.groupBy(key_col, "_salt").agg(
-        *[
-            (F.count(c) if how == "count" else getattr(F, how)(c)).alias(f"_{c}")
-            for c, how in agg_exprs.items()
-        ]
-    )
-    final_fns = {"count": "sum", "sum": "sum", "min": "min", "max": "max"}
-    return partial.groupBy(key_col).agg(
-        *[
-            getattr(F, final_fns[how])(f"_{c}").alias(f"{how}_{c}")
-            for c, how in agg_exprs.items()
-        ]
     )

@@ -1,17 +1,12 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
+"""Multimodal column plumbing: image/audio as opaque binary columns
 with typed metadata, processed by Arrow-batched mapInPandas stages.
 
-Nine image families and the WAV audio family decode FOR REAL with no
+Six image families and the WAV audio family decode FOR REAL with no
 external dependency (stdlib + numpy only), each validated against
 real-world files and/or ground-truth test-side encoders:
 
 - PNG (``_decode_png``): 8-bit gray/gray+alpha/RGB/RGBA/palette,
   non-interlaced, all five scanline filters;
-- JPEG (``_decode_jpeg`` / ``_decode_jpeg_progressive``): baseline
-  SOF0/SOF1 (chroma subsampling, restart markers) AND progressive
-  SOF2 (spectral selection, successive approximation, EOB runs) —
-  progressive validated by round-trip equality with the equivalent
-  baseline encodings and by real-world progressive files;
 - GIF (``_decode_gif``): 87a/89a, full LZW (giflib width rule — no
   TIFF-style early change), interlacing, first frame;
 - BMP (``_decode_bmp``): 8/24/32-bit BI_RGB + standard-mask
@@ -22,21 +17,21 @@ real-world files and/or ground-truth test-side encoders:
   the same real-world image;
 - WebP lossless (``_decode_webp`` / ``_decode_vp8l_stream``): VP8L
   streams incl. the ALPH chunk (``_decode_webp_alpha``);
-- Sun Raster (``_decode_ras``), SGI RGB (``_decode_sgi``) and
-  netpbm P1-P6 (``_decode_netpbm``);
+- netpbm P1-P6 (``_decode_netpbm``);
 - WAV (``decode_audio``): integer PCM (incl. sub-byte bit depths in
   their blockAlign container), IEEE float, G.711 A-law/mu-law,
   IMA ADPCM (``_decode_wav_ima_adpcm``), MS ADPCM
   (``_decode_wav_ms_adpcm``), WAVE_FORMAT_EXTENSIBLE; stereo
   downmix, FFT spectral features in ``_audio_features``.
 
-Remaining formats (lossy VP8 WebP, arithmetic-coded JPEG, mp3/ogg/flac,
-video) genuinely need PIL/ffmpeg-class codecs absent from this
-environment: ``decode_image`` raises NotImplementedError unless
-``fake=True``, in which case a deterministic fake decoder (seeded by
-the content hash) produces stable feature vectors so the Spark-side
-plumbing — schema, partitioning, UDF signature, Arrow batch shape —
-is real and tested end-to-end.
+These cover every image family the media corpus
+(``sources.media.generate_image_rows``) produces. Every other format
+(JPEG, lossy VP8 WebP, mp3/ogg/flac) is unsupported here:
+``decode_image`` raises NotImplementedError unless ``fake=True``, in
+which case a deterministic fake decoder (seeded by the content hash)
+produces stable feature vectors so the Spark-side plumbing — schema,
+partitioning, UDF signature, Arrow batch shape — is real and tested
+end-to-end.
 
 At 100 TB scale the relevant design points, all honored here:
 - binary payloads stay OUT of shuffles: features are extracted in a
@@ -51,7 +46,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -184,334 +178,6 @@ def _decode_png(data: bytes, keep_alpha: bool = False) -> np.ndarray:
     pal = np.frombuffer(plte, dtype=np.uint8)
     pal = pal[: (len(pal) // 3) * 3].reshape(-1, 3)
     return pal[px[:, :, 0]]
-
-
-# JPEG zigzag scan order: _JPEG_ZIGZAG[k] is the raster index of the
-# k-th coefficient in a zigzag-serialized 8x8 block (ITU-T T.81 fig. 5)
-_JPEG_ZIGZAG = np.array([
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-])
-
-# 8x8 IDCT basis: spatial = _IDCT_M @ coefs @ _IDCT_M.T
-# (M[x, u] = c(u)/2 * cos((2x+1) u pi / 16), c(0) = 1/sqrt(2))
-_IDCT_M = np.array(
-    [
-        [
-            (np.sqrt(0.5) if u == 0 else 1.0) / 2.0
-            * np.cos((2 * x + 1) * u * np.pi / 16.0)
-            for u in range(8)
-        ]
-        for x in range(8)
-    ]
-)
-
-
-def _jpeg_parse_dqt(seg: bytes, qt: dict) -> None:
-    sp = 0
-    while sp < len(seg):
-        pq, tq = seg[sp] >> 4, seg[sp] & 15
-        n = 64 * (2 if pq else 1)
-        raw = seg[sp + 1:sp + 1 + n]
-        if len(raw) < n:
-            raise ValueError("malformed JPEG: short DQT")
-        qt[tq] = np.frombuffer(
-            raw, dtype=">u2" if pq else np.uint8).astype(np.int32)
-        sp += 1 + n
-
-
-def _jpeg_parse_dht(seg: bytes, huff: dict) -> None:
-    sp = 0
-    while sp + 17 <= len(seg):
-        tc, th = seg[sp] >> 4, seg[sp] & 15
-        bits = seg[sp + 1:sp + 17]
-        nv = sum(bits)
-        vals = seg[sp + 17:sp + 17 + nv]
-        if len(vals) < nv:
-            raise ValueError("malformed JPEG: short DHT")
-        huff[(tc, th)] = _jpeg_huff_table(bits, vals)
-        sp += 17 + nv
-
-
-def _jpeg_finish(full: list) -> np.ndarray:
-    """Shared reconstruction tail: gray repeat or JFIF YCbCr->RGB,
-    rounded and clipped — the ONE place these constants live."""
-    if len(full) == 1:
-        y = np.clip(np.rint(full[0]), 0, 255).astype(np.uint8)
-        return np.repeat(y[:, :, None], 3, axis=2)
-    y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-    rgb = np.stack(
-        [y + 1.402 * cr,
-         y - 0.344136 * cb - 0.714136 * cr,
-         y + 1.772 * cb],
-        axis=2,
-    )
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
-
-
-def _jpeg_huff_table(bits: bytes, vals: bytes) -> dict:
-    """Canonical JPEG Huffman table from a DHT segment's BITS (count of
-    codes per length 1..16) and HUFFVAL arrays (ITU-T T.81 annex C
-    code-assignment order): {(length, code): symbol}."""
-    table = {}
-    code = 0
-    vi = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[vi]
-            code += 1
-            vi += 1
-        code <<= 1
-    if vi != len(vals):
-        raise ValueError("malformed JPEG: DHT bits/vals mismatch")
-    return table
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over an entropy-coded segment: un-stuffs
-    0xFF00, and ``restart()`` realigns across RSTn markers (resetting
-    is the caller's job for DC predictors)."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.buf = 0
-        self.nbits = 0
-
-    def _fill(self):
-        d = self.data
-        p = self.pos
-        if p >= len(d):
-            raise ValueError("malformed JPEG: truncated entropy data")
-        b = d[p]
-        if b == 0xFF:
-            nxt = d[p + 1] if p + 1 < len(d) else None
-            if nxt != 0x00:
-                raise ValueError(
-                    "malformed JPEG: unexpected marker in entropy data"
-                )
-            p += 1
-        self.pos = p + 1
-        self.buf = (self.buf << 8) | b
-        self.nbits += 8
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.buf >> self.nbits) & 1
-
-    def receive(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def restart(self):
-        # drop pad bits to the byte boundary, then consume the RSTn
-        self.buf = 0
-        self.nbits = 0
-        d = self.data
-        p = self.pos
-        if p + 1 >= len(d) or d[p] != 0xFF or not (0xD0 <= d[p + 1] <= 0xD7):
-            raise ValueError("malformed JPEG: expected restart marker")
-        self.pos = p + 2
-
-
-def _jpeg_huff_decode(reader: _JpegBitReader, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | reader.read_bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("malformed JPEG: invalid Huffman code")
-
-
-def _jpeg_extend(v: int, s: int) -> int:
-    # ITU-T T.81 F.2.2.1: the s-bit magnitude field encodes
-    # [-2^s+1, -2^(s-1)] U [2^(s-1), 2^s-1]
-    if s == 0:
-        return 0
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def _decode_jpeg(data: bytes) -> np.ndarray:
-    """Dependency-free baseline-JPEG decoder (numpy only): 8-bit
-    Huffman-coded sequential DCT (SOF0/SOF1), grayscale or YCbCr with
-    arbitrary integer sampling factors (4:4:4 / 4:2:2 / 4:2:0 ...),
-    restart markers, tables read from the stream. Returns HxWx3 uint8
-    (JFIF YCbCr->RGB, nearest-neighbor chroma upsampling). Progressive
-    (SOF2), arithmetic-coded, hierarchical, and CMYK streams raise
-    NotImplementedError honestly; structural damage raises
-    ValueError('malformed JPEG: ...') matching the PNG contract.
-
-    The entropy loop is per-bit Python — correct and adequate for
-    feature extraction on test corpora; a 100 TB media pipeline would
-    swap in a C-backed decoder behind the same ``decode_image``
-    signature (exactly the PNG decoder's documented trade-off)."""
-    import struct
-
-    if len(data) < 4 or data[0:2] != b"\xff\xd8":
-        raise ValueError("malformed JPEG: missing SOI")
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}  # (class, id) -> table
-    frame = None
-    restart_interval = 0
-    pos = 2
-    while True:
-        if pos + 2 > len(data):
-            raise ValueError("malformed JPEG: truncated before SOS")
-        if data[pos] != 0xFF:
-            raise ValueError("malformed JPEG: expected marker")
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xFF:  # fill byte
-            pos -= 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue  # standalone markers
-        if marker == 0xD9:
-            raise ValueError("malformed JPEG: EOI before SOS")
-        if pos + 2 > len(data):
-            raise ValueError("malformed JPEG: truncated segment")
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        seg = data[pos + 2:pos + seglen]
-        if seglen < 2 or pos + seglen > len(data):
-            raise ValueError("malformed JPEG: bad segment length")
-        pos += seglen
-        if marker == 0xDB:  # DQT
-            _jpeg_parse_dqt(seg, qt)
-        elif marker == 0xC4:  # DHT
-            _jpeg_parse_dht(seg, huff)
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker in (0xC0, 0xC1):  # baseline / extended sequential
-            prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if prec != 8:
-                raise NotImplementedError(
-                    f"{prec}-bit JPEG unsupported (8-bit baseline only)"
-                )
-            if nc not in (1, 3):
-                raise NotImplementedError(
-                    f"{nc}-component JPEG (CMYK/YCCK) unsupported"
-                )
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = struct.unpack(
-                    ">BBB", seg[6 + 3 * i:9 + 3 * i]
-                )
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            frame = (h, w, comps)
-        elif marker == 0xC2:
-            return _decode_jpeg_progressive(data)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"JPEG SOF{marker - 0xC0} (arithmetic/hierarchical) "
-                "unsupported — sequential (SOF0/SOF1) and progressive "
-                "(SOF2) only"
-            )
-        elif marker == 0xDA:  # SOS — entropy data follows
-            break
-        # APPn / COM / DNL etc.: skipped
-    if frame is None:
-        raise ValueError("malformed JPEG: SOS before SOF")
-    h, w, comps = frame
-    if h == 0 or w == 0:
-        raise ValueError("malformed JPEG: zero dimensions")
-    if w * h * 3 > _PNG_MAX_DECODED_BYTES:
-        raise NotImplementedError(
-            f"JPEG {w}x{h} exceeds the "
-            f"{_PNG_MAX_DECODED_BYTES >> 20}MB decode cap"
-        )
-    ns = seg[0]
-    if ns != len(comps):
-        raise NotImplementedError(
-            "non-interleaved multi-scan baseline JPEG unsupported"
-        )
-    scan_tables = {}
-    for i in range(ns):
-        cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-        scan_tables[cs] = (tdta >> 4, tdta & 15)
-    if ns == 1:
-        # T.81 A.2.2: a single-component scan is NON-interleaved — one
-        # 8x8 data unit per MCU in raster order, regardless of the
-        # frame's declared sampling factors
-        comps = [(cid, 1, 1, tq) for cid, _hs, _vs, tq in comps]
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    for _, hs, vs, _ in comps:
-        if hs < 1 or vs < 1 or hmax % hs or vmax % vs:
-            raise NotImplementedError(
-                f"JPEG sampling factors {hs}x{vs} vs {hmax}x{vmax} "
-                "unsupported"
-            )
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = {}
-    for cid, hs, vs, _ in comps:
-        planes[cid] = np.zeros((mcuy * 8 * vs, mcux * 8 * hs))
-    reader = _JpegBitReader(data, pos)
-    pred = {cid: 0 for cid, _, _, _ in comps}
-    for mcu in range(mcux * mcuy):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            reader.restart()
-            pred = {cid: 0 for cid in pred}
-        my, mx = divmod(mcu, mcux)
-        for cid, hs, vs, tq in comps:
-            try:
-                dc_tab = huff[(0, scan_tables[cid][0])]
-                ac_tab = huff[(1, scan_tables[cid][1])]
-                q = qt[tq]
-            except KeyError:
-                raise ValueError(
-                    "malformed JPEG: missing Huffman/quant table"
-                ) from None
-            for by in range(vs):
-                for bx in range(hs):
-                    coefs = np.zeros(64)
-                    s = _jpeg_huff_decode(reader, dc_tab)
-                    if s > 11:
-                        raise ValueError("malformed JPEG: DC category")
-                    pred[cid] += _jpeg_extend(reader.receive(s), s)
-                    coefs[0] = pred[cid] * int(q[0])
-                    k = 1
-                    while k < 64:
-                        rs = _jpeg_huff_decode(reader, ac_tab)
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r != 15:
-                                break  # EOB
-                            k += 16
-                            continue
-                        k += r
-                        if k > 63:
-                            raise ValueError(
-                                "malformed JPEG: AC run past block"
-                            )
-                        coefs[k] = (
-                            _jpeg_extend(reader.receive(s), s) * int(q[k])
-                        )
-                        k += 1
-                    block = np.zeros(64)
-                    block[_JPEG_ZIGZAG] = coefs
-                    spatial = (
-                        _IDCT_M @ block.reshape(8, 8) @ _IDCT_M.T + 128.0
-                    )
-                    y0 = (my * vs + by) * 8
-                    x0 = (mx * hs + bx) * 8
-                    planes[cid][y0:y0 + 8, x0:x0 + 8] = spatial
-    full = []
-    for cid, hs, vs, _ in comps:
-        p = planes[cid]
-        if hs != hmax or vs != vmax:
-            p = np.repeat(np.repeat(p, vmax // vs, axis=0),
-                          hmax // hs, axis=1)
-        full.append(p[:h, :w])
-    return _jpeg_finish(full)
 
 
 def _decode_bmp(data: bytes) -> np.ndarray:
@@ -893,435 +559,6 @@ def _decode_tiff(data: bytes) -> np.ndarray:
             g = 255 - g
         return np.repeat(g[:, :, None], 3, axis=2)
     return px[:, :, :3].copy()  # RGB(A): alpha dropped
-
-
-def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
-    """Progressive-JPEG decoder (SOF2, Huffman): full spectral
-    selection + successive approximation per ITU-T T.81 G.1.2 — DC
-    first/refinement scans (interleaved or single-component), AC
-    first scans with EOB-run coding, and AC refinement scans with
-    correction bits — buffering quantized coefficients per component
-    and running dequant + IDCT + upsample + YCbCr once after all
-    scans. Restart markers reset predictors and EOB runs. Shares the
-    bit reader, Huffman tables, IDCT basis, and the decode cap with
-    the baseline path."""
-    import struct
-
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    frame = None
-    restart_interval = 0
-    coefs: dict[int, np.ndarray] = {}  # cid -> (bh, bw, 64) int32
-    pos = 2
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("malformed JPEG: expected marker")
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xFF:
-            pos -= 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        if pos + 2 > len(data):
-            raise ValueError("malformed JPEG: truncated segment")
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        if seglen < 2 or pos + seglen > len(data):
-            raise ValueError("malformed JPEG: bad segment length")
-        seg = data[pos + 2:pos + seglen]
-        pos += seglen
-        if marker == 0xDB:
-            _jpeg_parse_dqt(seg, qt)
-        elif marker == 0xC4:
-            _jpeg_parse_dht(seg, huff)
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xC2:
-            prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if prec != 8:
-                raise NotImplementedError(
-                    f"{prec}-bit progressive JPEG unsupported")
-            if nc not in (1, 3):
-                raise NotImplementedError(
-                    f"{nc}-component JPEG (CMYK/YCCK) unsupported")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = struct.unpack(
-                    ">BBB", seg[6 + 3 * i:9 + 3 * i])
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            if w * h * 3 > _PNG_MAX_DECODED_BYTES:
-                raise NotImplementedError(
-                    f"JPEG {w}x{h} exceeds the "
-                    f"{_PNG_MAX_DECODED_BYTES >> 20}MB decode cap")
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            for _, hs, vs, _tq in comps:
-                if hs < 1 or vs < 1 or hmax % hs or vmax % vs:
-                    raise NotImplementedError(
-                        f"JPEG sampling {hs}x{vs} unsupported")
-            mcux = -(-w // (8 * hmax))
-            mcuy = -(-h // (8 * vmax))
-            frame = (h, w, comps, hmax, vmax, mcux, mcuy)
-            for cid, hs, vs, _tq in comps:
-                coefs[cid] = np.zeros(
-                    (mcuy * vs, mcux * hs, 64), dtype=np.int32)
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("malformed JPEG: SOS before SOF")
-            h, w, comps, hmax, vmax, mcux, mcuy = frame
-            ns = seg[0]
-            scan_comps = []
-            for i in range(ns):
-                cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-                spec = next((c for c in comps if c[0] == cs), None)
-                if spec is None:
-                    raise ValueError("malformed JPEG: unknown scan comp")
-                scan_comps.append((spec, tdta >> 4, tdta & 15))
-            ss, se, ahl = seg[1 + 2 * ns:4 + 2 * ns]
-            ah, al = ahl >> 4, ahl & 15
-            reader = _JpegBitReader(data, pos)
-            pos = _jpeg_progressive_scan(
-                reader, data, scan_comps, coefs, huff,
-                ss, se, ah, al, frame, restart_interval)
-        # APPn/COM skipped
-    if frame is None or not coefs:
-        raise ValueError("malformed JPEG: no frame data")
-    h, w, comps, hmax, vmax, mcux, mcuy = frame
-    full = []
-    for cid, hs, vs, tq in comps:
-        q = qt.get(tq)
-        if q is None:
-            raise ValueError("malformed JPEG: missing quant table")
-        c = coefs[cid] * q  # (bh, bw, 64) quantized -> raw
-        blocks = np.zeros((c.shape[0], c.shape[1], 64))
-        blocks[:, :, _JPEG_ZIGZAG] = c
-        bh, bw = c.shape[0], c.shape[1]
-        spatial = (
-            np.einsum(
-                "xu,rcuv,yv->rxcy",
-                _IDCT_M,
-                blocks.reshape(bh, bw, 8, 8),
-                _IDCT_M,
-            ).reshape(bh * 8, bw * 8)
-            + 128.0
-        )
-        if hs != hmax or vs != vmax:
-            spatial = np.repeat(
-                np.repeat(spatial, vmax // vs, axis=0),
-                hmax // hs, axis=1)
-        full.append(spatial[:h, :w])
-    return _jpeg_finish(full)
-
-
-def _jpeg_progressive_scan(reader, data, scan_comps, coefs, huff,
-                           ss, se, ah, al, frame, restart_interval):
-    """Decode one progressive scan in place; returns the stream
-    position after the entropy-coded segment."""
-    h, w, comps, hmax, vmax, mcux, mcuy = frame
-    eobrun = 0
-    pred = {spec[0]: 0 for spec, _, _ in scan_comps}
-
-    def maybe_restart(unit_index, total_units):
-        nonlocal eobrun
-        if (restart_interval and unit_index
-                and unit_index % restart_interval == 0
-                and unit_index < total_units):
-            reader.restart()
-            eobrun = 0
-            for k in pred:
-                pred[k] = 0
-
-    if ss == 0:
-        # ----- DC scan -----
-        if se != 0:
-            raise ValueError("malformed JPEG: DC scan with Se != 0")
-
-        def dc_block(cid, by, bx, dc_tab):
-            c = coefs[cid][by, bx]
-            if ah == 0:
-                s = _jpeg_huff_decode(reader, dc_tab)
-                if s > 11:
-                    raise ValueError("malformed JPEG: DC category")
-                pred[cid] += _jpeg_extend(reader.receive(s), s)
-                c[0] = pred[cid] << al
-            else:
-                if reader.read_bit():
-                    c[0] |= 1 << al
-
-        if len(scan_comps) > 1:
-            total = mcux * mcuy
-            for mcu in range(total):
-                maybe_restart(mcu, total)
-                my, mx = divmod(mcu, mcux)
-                for spec, td, _ta in scan_comps:
-                    cid, hs, vs, _tq = spec
-                    dc_tab = (huff.get((0, td))
-                              if ah == 0 else None)
-                    if ah == 0 and dc_tab is None:
-                        raise ValueError(
-                            "malformed JPEG: missing DC table")
-                    for by in range(vs):
-                        for bx in range(hs):
-                            dc_block(cid, my * vs + by, mx * hs + bx,
-                                     dc_tab)
-        else:
-            spec, td, _ta = scan_comps[0]
-            cid, hs, vs, _tq = spec
-            bw = -(-((w * hs + hmax - 1) // hmax) // 8)
-            bh = -(-((h * vs + vmax - 1) // vmax) // 8)
-            dc_tab = huff.get((0, td)) if ah == 0 else None
-            if ah == 0 and dc_tab is None:
-                raise ValueError("malformed JPEG: missing DC table")
-            total = bw * bh
-            for u in range(total):
-                maybe_restart(u, total)
-                by, bx = divmod(u, bw)
-                dc_block(cid, by, bx, dc_tab)
-    else:
-        # ----- AC scan: single component, non-interleaved -----
-        if len(scan_comps) != 1:
-            raise ValueError("malformed JPEG: interleaved AC scan")
-        spec, _td, ta = scan_comps[0]
-        cid, hs, vs, _tq = spec
-        ac_tab = huff.get((1, ta))
-        if ac_tab is None:
-            raise ValueError("malformed JPEG: missing AC table")
-        bw = -(-((w * hs + hmax - 1) // hmax) // 8)
-        bh = -(-((h * vs + vmax - 1) // vmax) // 8)
-        p1, m1 = 1 << al, -1 << al
-        total = bw * bh
-        for u in range(total):
-            maybe_restart(u, total)
-            by, bx = divmod(u, bw)
-            c = coefs[cid][by, bx]
-            if ah == 0:
-                # first scan for this band
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = _jpeg_huff_decode(reader, ac_tab)
-                    r, s = rs >> 4, rs & 15
-                    if s == 0:
-                        if r < 15:
-                            eobrun = (1 << r) - 1
-                            if r:
-                                eobrun += reader.receive(r)
-                            break
-                        k += 16
-                        continue
-                    k += r
-                    if k > se:
-                        raise ValueError(
-                            "malformed JPEG: AC run past band")
-                    c[k] = _jpeg_extend(reader.receive(s), s) << al
-                    k += 1
-            else:
-                # refinement scan (T.81 G.1.2.3 / libjpeg AC_refine)
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        rs = _jpeg_huff_decode(reader, ac_tab)
-                        r, s = rs >> 4, rs & 15
-                        val = 0
-                        if s == 0:
-                            if r < 15:
-                                eobrun = (1 << r)
-                                if r:
-                                    eobrun += reader.receive(r)
-                                break
-                            # r == 15: skip 16 zero-history coefs
-                        else:
-                            if s != 1:
-                                raise ValueError(
-                                    "malformed JPEG: bad refine size")
-                            val = p1 if reader.read_bit() else m1
-                        while k <= se:
-                            if c[k] != 0:
-                                if reader.read_bit():
-                                    if (c[k] & p1) == 0:
-                                        c[k] += p1 if c[k] > 0 else m1
-                            else:
-                                if r == 0:
-                                    if val:
-                                        c[k] = val
-                                    k += 1
-                                    break
-                                r -= 1
-                            k += 1
-                if eobrun > 0:
-                    # correction bits still appear in EOB-covered
-                    # blocks for already-nonzero coefficients
-                    while k <= se:
-                        if c[k] != 0 and reader.read_bit():
-                            if (c[k] & p1) == 0:
-                                c[k] += p1 if c[k] > 0 else m1
-                        k += 1
-                    eobrun -= 1
-    # resync to the next true marker: the final partial byte (pad
-    # bits) may never have been consumed by the bit reader
-    p = reader.pos
-    while p + 1 < len(data) and not (
-            data[p] == 0xFF and data[p + 1] != 0x00):
-        p += 1
-    return p
-
-
-def _decode_ras(data: bytes) -> np.ndarray:
-    """Sun Raster decoder: 8-bit paletted / 24 / 32-bit, standard
-    (BGR), RT_FORMAT_RGB, and RLE (type 2) encodings, 16-bit row
-    padding."""
-    import struct
-
-    if len(data) < 32:
-        raise ValueError("malformed RAS: truncated header")
-    magic, w, h, depth, _length, rtype, maptype, maplen = struct.unpack(
-        ">8i", data[:32])
-    if magic != 0x59A66A95:
-        raise ValueError("malformed RAS: bad magic")
-    if w < 1 or h < 1:
-        raise ValueError("malformed RAS: bad dimensions")
-    if w * h * 3 > _PNG_MAX_DECODED_BYTES:
-        raise NotImplementedError(
-            f"RAS {w}x{h} exceeds the "
-            f"{_PNG_MAX_DECODED_BYTES >> 20}MB decode cap")
-    if depth not in (8, 24, 32):
-        raise NotImplementedError(f"{depth}-bit RAS unsupported")
-    if rtype not in (0, 1, 2, 3):
-        raise NotImplementedError(f"RAS type {rtype} unsupported")
-    pos = 32
-    pal = None
-    if maptype == 1 and maplen:
-        praw = data[pos:pos + maplen]
-        if len(praw) < maplen:
-            raise ValueError("malformed RAS: truncated color map")
-        n = maplen // 3
-        pal = np.frombuffer(praw, np.uint8).reshape(3, n).T  # R,G,B planes
-        pos += maplen
-    elif maptype and maplen:
-        pos += maplen
-    stride = ((w * depth // 8) + 1) & ~1  # rows pad to 16 bits
-    need = stride * h
-    if rtype == 2:
-        # RLE: 0x80 n byte -> byte repeated n+1 (n==0: literal 0x80)
-        src = data[pos:]
-        out = bytearray()
-        i = 0
-        while i < len(src) and len(out) < need:
-            b0 = src[i]
-            if b0 != 0x80:
-                out.append(b0)
-                i += 1
-                continue
-            if i + 1 >= len(src):
-                break
-            n = src[i + 1]
-            if n == 0:
-                out.append(0x80)
-                i += 2
-            else:
-                if i + 2 >= len(src):
-                    break
-                out += bytes([src[i + 2]]) * (n + 1)
-                i += 3
-        raw = bytes(out)
-    else:
-        raw = data[pos:pos + need]
-    if len(raw) < need:
-        raise ValueError("malformed RAS: short pixel data")
-    rows = np.frombuffer(raw, np.uint8, count=need).reshape(h, stride)
-    if depth == 8:
-        idx = rows[:, :w]
-        if pal is not None:
-            if int(idx.max(initial=0)) >= len(pal):
-                raise ValueError("malformed RAS: palette index range")
-            return pal[idx]
-        return np.repeat(idx[:, :, None], 3, axis=2).copy()
-    ch = depth // 8
-    px = rows[:, : w * ch].reshape(h, w, ch)
-    if ch == 4:
-        px = px[:, :, 1:]  # leading pad/alpha byte
-    if rtype != 3:  # standard order is BGR; RT_FORMAT_RGB keeps RGB
-        px = px[:, :, ::-1]
-    return px.copy()
-
-
-def _decode_sgi(data: bytes) -> np.ndarray:
-    """SGI image (RGB/.sgi) decoder: 1 byte/channel, verbatim or RLE
-    storage, 1-4 channels (gray expanded, alpha dropped), bottom-up
-    rows."""
-    import struct
-
-    if len(data) < 512:
-        raise ValueError("malformed SGI: truncated header")
-    magic, storage, bpc, dim, w, h, z = struct.unpack(
-        ">hBBHHHH", data[:12])
-    if magic != 474:
-        raise ValueError("malformed SGI: bad magic")
-    if bpc != 1:
-        raise NotImplementedError("16-bit SGI unsupported")
-    if dim == 1:
-        h, z = 1, 1
-    elif dim == 2:
-        z = 1
-    if w < 1 or h < 1 or z < 1 or z > 4:
-        raise ValueError("malformed SGI: bad dimensions")
-    if w * h * 3 > _PNG_MAX_DECODED_BYTES:
-        raise NotImplementedError(
-            f"SGI {w}x{h} exceeds the "
-            f"{_PNG_MAX_DECODED_BYTES >> 20}MB decode cap")
-    planes = np.zeros((z, h, w), dtype=np.uint8)
-    if storage == 0:  # verbatim, bottom-up, channel-planar
-        need = 512 + w * h * z
-        if len(data) < need:
-            raise ValueError("malformed SGI: short pixel data")
-        planes = np.frombuffer(
-            data, np.uint8, count=w * h * z, offset=512
-        ).reshape(z, h, w).copy()
-    elif storage == 1:  # RLE with per-scanline offset tables
-        n = h * z
-        tab_end = 512 + 8 * n
-        if len(data) < tab_end:
-            raise ValueError("malformed SGI: truncated RLE tables")
-        starts = np.frombuffer(data, ">u4", count=n, offset=512)
-        lengths = np.frombuffer(data, ">u4", count=n, offset=512 + 4 * n)
-        for c in range(z):
-            for y in range(h):
-                i = int(starts[c * h + y])
-                end = i + int(lengths[c * h + y])
-                if end > len(data):
-                    raise ValueError("malformed SGI: RLE run range")
-                row = bytearray()
-                while i < end:
-                    b0 = data[i]
-                    i += 1
-                    count = b0 & 0x7F
-                    if count == 0:
-                        break
-                    if b0 & 0x80:  # literal run
-                        row += data[i:i + count]
-                        i += count
-                    else:  # repeat next byte
-                        if i >= end:
-                            raise ValueError(
-                                "malformed SGI: truncated RLE run")
-                        row += bytes([data[i]]) * count
-                        i += 1
-                if len(row) < w:
-                    raise ValueError("malformed SGI: short scanline")
-                planes[c, y] = np.frombuffer(
-                    bytes(row[:w]), np.uint8)
-    else:
-        raise NotImplementedError(f"SGI storage {storage} unsupported")
-    img = planes[::, ::-1]  # bottom-up -> top-down
-    if z == 1:
-        return np.repeat(img[0][:, :, None], 3, axis=2).copy()
-    if z == 2:
-        return np.repeat(img[0][:, :, None], 3, axis=2).copy()
-    return np.stack([img[0], img[1], img[2]], axis=2).copy()
 
 
 def _decode_netpbm(data: bytes) -> np.ndarray:
@@ -1902,8 +1139,6 @@ def _sniff_image(b: bytes):
     head = bytes(b[:8])
     if head == _PNG_SIG:
         return _decode_png, "image/png"
-    if head[:2] == b"\xff\xd8":
-        return _decode_jpeg, "image/jpeg"
     if head[:6] in (b"GIF87a", b"GIF89a"):
         return _decode_gif, "image/gif"
     if head[:2] == b"BM":
@@ -1913,10 +1148,6 @@ def _sniff_image(b: bytes):
     if (head[:1] == b"P" and head[1:2] in b"123456"
             and head[2:3] in b" \t\r\n#"):
         return _decode_netpbm, "image/x-portable-anymap"
-    if head[:4] == b"\x59\xa6\x6a\x95":
-        return _decode_ras, "image/x-sun-raster"
-    if head[:2] == b"\x01\xda":
-        return _decode_sgi, "image/x-sgi"
     if head[:4] == b"RIFF" and bytes(b[8:12]) == b"WEBP":
         return _decode_webp, "image/webp"
     return None, "image/unknown"
@@ -1925,21 +1156,16 @@ def _sniff_image(b: bytes):
 def decode_image(blob: bytes, fake: bool = False) -> np.ndarray:
     """Decode an image blob to an HxWx3 uint8 array.
 
-    PNG (8-bit, non-interlaced), JPEG — both baseline (SOF0/SOF1,
-    chroma subsampling, restart markers) and PROGRESSIVE (SOF2,
-    spectral selection + successive approximation + EOB runs) —
-    GIF87a/89a (full LZW, interlacing, first frame), BMP
-    (8/24/32-bit, BI_RGB / standard-mask BI_BITFIELDS), and baseline
-    TIFF (8-bit strips, uncompressed/LZW/PackBits, both byte orders)
-    decode FOR REAL via the dependency-free ``_decode_png`` /
-    ``_decode_jpeg`` / ``_decode_jpeg_progressive`` / ``_decode_gif``
-    / ``_decode_bmp`` / ``_decode_tiff`` (stdlib + numpy) — no
-    ``fake`` needed, and lossless WebP (VP8L: all four transforms,
-    color cache, meta prefix codes, LZ77) via ``_decode_webp``.
-    Remaining formats (lossy-VP8 WebP, arithmetic-coded JPEG) need an
-    image library absent from this environment; ``fake=True`` derives
-    a deterministic 8x8x3 array from the content hash (stable across
-    runs/machines) for plumbing tests.
+    PNG (8-bit, non-interlaced), GIF87a/89a (full LZW, interlacing,
+    first frame), BMP (8/24/32-bit, BI_RGB / standard-mask
+    BI_BITFIELDS), baseline TIFF (8-bit strips, uncompressed/LZW/
+    PackBits, both byte orders), netpbm P1-P6 and lossless WebP (VP8L:
+    all four transforms, color cache, meta prefix codes, LZ77) decode
+    FOR REAL via the dependency-free decoders above (stdlib + numpy).
+    Any other format (JPEG, lossy-VP8 WebP, ...) raises
+    NotImplementedError; ``fake=True`` instead derives a deterministic
+    8x8x3 array from the content hash (stable across runs/machines) for
+    plumbing tests.
     """
     decoder = _sniff_image(blob)[0] if blob else None
     if decoder is not None:
@@ -1953,11 +1179,10 @@ def decode_image(blob: bytes, fake: bool = False) -> np.ndarray:
                 raise
     if not fake:
         raise NotImplementedError(
-            "image format not natively decodable (PNG, baseline + "
-            "progressive JPEG, GIF, BMP, baseline TIFF, netpbm, RAS, "
-            "SGI, and lossless WebP decode without external libraries; "
-            "lossy-VP8 WebP/arithmetic-JPEG need PIL/opencv, absent "
-            "here) — pass fake=True for the deterministic test stub"
+            "image format not natively decodable (PNG, GIF, BMP, "
+            "baseline TIFF, netpbm and lossless WebP decode without "
+            "external libraries) — pass fake=True for the deterministic "
+            "test stub"
         )
     digest = hashlib.sha256(blob or b"").digest()
     rng = np.random.default_rng(int.from_bytes(digest[:8], "big"))
@@ -2495,19 +1720,3 @@ def extract_audio_features(
             yield out
 
     return df.select(*key_cols, blob_col).mapInPandas(run, schema=out_schema)
-
-
-def sample_video_frames(blob: bytes, every_n: int = 30, fake: bool = False):
-    """Frame-sampling stub: yields deterministic fake frames when
-    ``fake=True``; real implementation needs ffmpeg bindings."""
-    if not fake:
-        raise NotImplementedError(
-            "video frame sampling requires ffmpeg, not available here — "
-            "pass fake=True for the deterministic test stub"
-        )
-    digest = hashlib.sha256(blob or b"").digest()
-    n_frames = 2 + digest[0] % 3
-    for i in range(n_frames):
-        frame_seed = hashlib.sha256(digest + i.to_bytes(2, "big")).digest()
-        rng = np.random.default_rng(int.from_bytes(frame_seed[:8], "big"))
-        yield rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8)

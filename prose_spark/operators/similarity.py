@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 
 def _spread(df: DataFrame) -> DataFrame:
     """Repartition a compute-bound frame to the session's parallelism
-    when it arrives under-partitioned from a scan. Small parquet inputs
+    when it arrives under-partitioned. Small parquet inputs
     load as ONE partition, which serializes every downstream
     signature/verify expression onto one core; AQE won't fix it (it
     coalesces by BYTES, and these stages are compute-heavy on tiny
@@ -80,16 +80,6 @@ def brute_force_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _dot_lit(vec_col, centroid: list[float]):
-    """Dot product of a vector column with a literal centroid (native)."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(F.col(vec_col), c, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
     )
 
 
@@ -354,9 +344,9 @@ def embedding_near_dup_pairs(
 
 def _plane_weights(dim: int, n_planes: int, salt: str = "p") -> list[list[float]]:
     """Deterministic ±1 hyperplane weights from md5 parity of
-    (salt, plane, index) — computed in Python once and shipped as plan
-    literals, so signature evaluation is pure arithmetic (no per-element
-    hashing at runtime)."""
+    (salt, plane, index) — computed in Python once per signature stage,
+    so signature evaluation is pure arithmetic (no per-element hashing
+    at runtime)."""
     import hashlib
 
     return [
@@ -369,40 +359,16 @@ def _plane_weights(dim: int, n_planes: int, salt: str = "p") -> list[list[float]
     ]
 
 
-def _signature(vec_col: str, dim: int, n_planes: int, salt: str = "p"):
-    """Random-hyperplane signature integer for one table: sign bits of
-    the projections onto ``n_planes`` deterministic ±1 planes."""
-    planes = F.array(*[
-        F.array(*[F.lit(x) for x in row])
-        for row in _plane_weights(dim, n_planes, salt)
-    ])
-    projs = F.transform(
-        planes,
-        lambda w: F.aggregate(
-            F.zip_with(F.col(vec_col), w, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    powers = F.array(*[F.lit(2 ** p) for p in range(n_planes)])
-    return F.aggregate(
-        F.zip_with(projs, powers,
-                   lambda x, pw: F.when(x >= 0, pw).otherwise(F.lit(0))),
-        F.lit(0),
-        lambda acc, b: acc + b,
-    )
-
-
 def _signatures_pandas(dim: int, n_planes: int, n_tables: int):
-    """Arrow-vectorized twin of _table_signatures: one numpy matmul per
+    """Arrow-vectorized hyperplane signatures: one numpy matmul per
     batch computes ALL L x r plane projections ((batch, dim) @ (dim,
-    L*r)), sign bits fold into per-table signature ints. The interpreted
+    L*r)), sign bits fold into per-table signature ints. An interpreted
     higher-order-function path costs ~2.5 ms/row at 192 planes (measured
-    — Catalyst evaluates the literal-matrix lambdas per element); numpy
+    — Catalyst evaluates literal-matrix lambdas per element); numpy
     does the same arithmetic in ~2 µs/row. Signatures only GATE
     candidates — the exact cosine verify stays JVM-side — so float
-    summation-order differences vs the literal-matrix path can only
-    perturb which candidates are probed, never a verified value."""
+    summation-order differences can only perturb which candidates are
+    probed, never a verified value."""
     import numpy as np
 
     flat = np.array(
@@ -423,51 +389,6 @@ def _signatures_pandas(dim: int, n_planes: int, n_tables: int):
         return pd.Series(list(S))
 
     return sigs
-
-
-def _table_signatures(vec_col: str, dim: int, n_planes: int, n_tables: int):
-    """array<struct<tbl,sig>> — one independent hyperplane signature per
-    hash table (OR-construction: a pair is a candidate if ANY table's
-    signatures collide, which is what keeps recall from collapsing as N
-    grows; a single AND-only table has a recall cliff). All L x r plane
-    projections are computed in ONE literal-matrix transform pass, then
-    sliced into per-table sign-bit integers — a single small expression
-    regardless of table count."""
-    flat = []
-    for t in range(n_tables):
-        flat.extend(_plane_weights(dim, n_planes, salt=f"t{t}p"))
-    planes = F.array(*[
-        F.array(*[F.lit(x) for x in row]) for row in flat
-    ])
-    projs = F.transform(
-        planes,
-        lambda w: F.aggregate(
-            F.zip_with(F.col(vec_col), w, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    powers = F.array(*[F.lit(2 ** p) for p in range(n_planes)])
-
-    # let-bind projs via single-element transform so the projection pass
-    # evaluates once per row even after projection collapse
-    return F.transform(
-        F.array(projs),
-        lambda pr: F.transform(
-            F.sequence(F.lit(0), F.lit(n_tables - 1)),
-            lambda t: F.struct(
-                t.cast("int").alias("tbl"),
-                F.aggregate(
-                    F.zip_with(
-                        F.slice(pr, t * n_planes + 1, n_planes), powers,
-                        lambda x, pw: F.when(x >= 0, pw).otherwise(F.lit(0)),
-                    ),
-                    F.lit(0),
-                    lambda acc, b: acc + b,
-                ).alias("sig"),
-            ),
-        ),
-    ).getItem(0)
 
 
 def lsh_topk(

@@ -84,57 +84,6 @@ def stream_annotate_pages(
     )
 
 
-def stream_dedup_urls(
-    spark: SparkSession,
-    pages_path: str,
-    checkpoint_path: str,
-):
-    """Custom stateful operator via applyInPandasWithState: emit each url
-    the FIRST time it is seen across the whole stream (exactly-once
-    first-occurrence dedup — the streaming counterpart of exact_dedup).
-
-    State per url group: a seen-count. New urls are emitted with the
-    micro-batch in which they appeared; repeats update state and emit
-    nothing. Returns the streaming DataFrame (caller starts it).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState
-
-    from prose_spark.schemas import PAGES_SCHEMA
-
-    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_path)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("n_in_batch", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("seen", T.LongType())])
-
-    def first_seen(key, pdfs, state: GroupState):
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        if state.exists:
-            (seen,) = state.get
-            state.update((seen + n,))
-            return iter([])  # already emitted
-        state.update((n,))
-        yield pd.DataFrame({"url": [key[0]], "n_in_batch": [n]})
-
-    return (
-        pages.groupBy("url")
-        .applyInPandasWithState(
-            first_seen,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-    )
-
-
 def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Assign session ids per user: a new session starts when the gap to
     the previous event exceeds ``gap_minutes``."""

@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import re
 from bisect import bisect_right
+from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -154,16 +155,16 @@ _ATTITUDE_STEMS = ("think", "thought", "believ", "know", "knew", "say",
                    "argu", "hope", "doubt", "pretend", "want")
 
 
-_OBJ_CONTROL_CACHE: dict[str, bool] = {}
+# the surface predicates below are pure functions of the word (the
+# tagger's tag dictionary is fixed once loaded), memoized per worker and
+# capped at ~1M entries like every other kernel memo
+_memo = lru_cache(maxsize=1 << 20)
 
 
+@_memo
 def _is_object_control(word: str) -> bool:
-    v = _OBJ_CONTROL_CACHE.get(word)
-    if v is None:
-        w = word.lower()
-        v = any(w.startswith(s) for s in _OBJ_CONTROL_STEMS)
-        _OBJ_CONTROL_CACHE[word] = v
-    return v
+    w = word.lower()
+    return any(w.startswith(s) for s in _OBJ_CONTROL_STEMS)
 
 
 # directive control verbs whose TO-complement is an INSTRUCTION, not
@@ -328,86 +329,56 @@ _EVENTIVE_PASSIVES = frozenset((
     "designed", "developed", "established",
 ))
 
-_CLAUSE_TAKING_CACHE: dict[str, bool] = {}
 
-
+@_memo
 def _is_clause_taking(word: str) -> bool:
-    """Memoized ``any(word.startswith(st) for st in
-    _CLAUSE_TAKING_STEMS)`` — the scan is a pure function of the word
-    and was the single hottest line of the chunker (one 60-stem scan
-    per VP)."""
-    v = _CLAUSE_TAKING_CACHE.get(word)
-    if v is None:
-        v = any(word.startswith(st) for st in _CLAUSE_TAKING_STEMS)
-        _CLAUSE_TAKING_CACHE[word] = v
-    return v
+    """Memoized because the stem scan is the chunker's single hottest
+    line otherwise (one 60-stem scan per VP)."""
+    return any(word.startswith(st) for st in _CLAUSE_TAKING_STEMS)
 
 
-_ATTITUDE_CACHE: dict[str, bool] = {}
-
-
+@_memo
 def _is_attitude(word: str) -> bool:
-    v = _ATTITUDE_CACHE.get(word)
-    if v is None:
-        v = any(word.startswith(st) for st in _ATTITUDE_STEMS)
-        _ATTITUDE_CACHE[word] = v
-    return v
+    return any(word.startswith(st) for st in _ATTITUDE_STEMS)
 
 
-_TRANSFER_CACHE: dict[str, bool] = {}
-
-
+@_memo
 def _is_transfer(word: str) -> bool:
-    v = _TRANSFER_CACHE.get(word)
-    if v is None:
-        v = any(word.startswith(s) for s in _TRANSFER_STEMS)
-        _TRANSFER_CACHE[word] = v
-    return v
+    return any(word.startswith(s) for s in _TRANSFER_STEMS)
 
 
-_DIRECTIVE_CACHE: dict[str, bool] = {}
-
-
+@_memo
 def _is_directive(word: str) -> bool:
-    v = _DIRECTIVE_CACHE.get(word)
-    if v is None:
-        v = any(word.startswith(s) for s in _DIRECTIVE_STEMS)
-        _DIRECTIVE_CACHE[word] = v
-    return v
+    return any(word.startswith(s) for s in _DIRECTIVE_STEMS)
 
 
-_VERB_ONLY_CACHE: dict[str, bool] = {}
-
-
+@_memo
 def _verb_only_surface(word: str) -> bool:
     """True when the tagger's training tag dictionary lists ONLY verb
     tags for the surface ("join" -> {VB}) — safe evidence that an
     NN-tagged coordinated conjunct is really a verb."""
-    v = _VERB_ONLY_CACHE.get(word)
-    if v is None:
-        tags = ()
+    tags = ()
+    try:
+        from prose_spark.nlp.tagger import default_tagger
+
+        td = default_tagger().tag_dict
+        if td:
+            tags = td.get(word, ())
+    except Exception:
+        pass
+    v = bool(tags) and all(t.startswith("VB") for t in tags)
+    if not tags and word.endswith("s") and len(word) > 3:
+        # OOV 3rd-person form whose stem IS known and verb-only
+        # ("prefers" -> "prefer")
         try:
             from prose_spark.nlp.tagger import default_tagger
 
-            td = default_tagger().tag_dict
-            if td:
-                tags = td.get(word, ())
+            td = default_tagger().tag_dict or {}
+            stem_tags = td.get(word[:-1], ())
+            v = bool(stem_tags) and all(
+                t.startswith("VB") for t in stem_tags)
         except Exception:
             pass
-        v = bool(tags) and all(t.startswith("VB") for t in tags)
-        if not tags and word.endswith("s") and len(word) > 3:
-            # OOV 3rd-person form whose stem IS known and verb-only
-            # ("prefers" -> "prefer")
-            try:
-                from prose_spark.nlp.tagger import default_tagger
-
-                td = default_tagger().tag_dict or {}
-                stem_tags = td.get(word[:-1], ())
-                v = bool(stem_tags) and all(
-                    t.startswith("VB") for t in stem_tags)
-            except Exception:
-                pass
-        _VERB_ONLY_CACHE[word] = v
     return v
 
 
@@ -438,56 +409,40 @@ def _verb_capable_surface(word: str) -> bool:
     return False
 
 
-_ADJ_CAPABLE_CACHE: dict[str, bool] = {}
-
-
+@_memo
 def _adj_capable_surface(word: str) -> bool:
     """True when the tagger's training tag dictionary lists JJ among
     the surface's observed tags ("advanced" -> {VBD, JJ, VBN})."""
-    v = _ADJ_CAPABLE_CACHE.get(word)
-    if v is None:
-        v = False
-        try:
-            from prose_spark.nlp.tagger import default_tagger
+    try:
+        from prose_spark.nlp.tagger import default_tagger
 
-            td = default_tagger().tag_dict
-            if td:
-                v = "JJ" in td.get(word, ())
-        except Exception:
-            pass
-        _ADJ_CAPABLE_CACHE[word] = v
-    return v
+        td = default_tagger().tag_dict
+        if td:
+            return "JJ" in td.get(word, ())
+    except Exception:
+        pass
+    return False
 
 
-_OOV_CACHE: dict[str, bool] = {}
-
-
+@_memo
 def _oov_surface(word: str) -> bool:
     """True when the surface is absent from the tagger's training tag
     dictionary — its tag came from the OOV path and carries less
     evidence than an in-vocabulary tag."""
-    v = _OOV_CACHE.get(word)
-    if v is None:
-        v = True
-        try:
-            from prose_spark.nlp.tagger import default_tagger
+    try:
+        from prose_spark.nlp.tagger import default_tagger
 
-            td = default_tagger().tag_dict
-            if td:
-                v = word not in td
-        except Exception:
-            pass
-        _OOV_CACHE[word] = v
-    return v
+        td = default_tagger().tag_dict
+        if td:
+            return word not in td
+    except Exception:
+        pass
+    return True
 
 
 _MONTH_NOUNS = frozenset(("january", "february", "march", "april",
                           "may", "june", "july", "august", "september",
                           "october", "november", "december"))
-
-
-def _code(tags: list[str]) -> str:
-    return "".join(_TAG_CODE.get(t, ".") for t in tags)
 
 
 def extract_triples_doc(tokens: list[dict]) -> list[dict]:

@@ -21,7 +21,6 @@ Metrics per bucket: row counts in/out, triples, wall time, input lineage
 from __future__ import annotations
 
 import json
-import shutil
 import time
 from pathlib import Path
 
@@ -494,7 +493,3 @@ def update_canonical_tables(
         "n_forms": n_forms,
         "n_canon_triples": written.get["n"],
     }
-
-
-def reset_output(out_dir: str) -> None:
-    shutil.rmtree(out_dir, ignore_errors=True)

@@ -400,8 +400,8 @@ def generate_image_rows(n: int, seed: int = 42):
     """Yield (url, format_name, blob) — formats cycle png/bmp/ppm/
     webp/gif/tiff so one query exercises six real decoders (every
     native image family the corpus-side encoders can produce; the
-    remaining decoders — JPEG, netpbm variants, RAS, SGI — are
-    torture-tested in tests/ with their own encoders)."""
+    remaining netpbm variants are torture-tested in tests/ with their
+    own encoders)."""
     for i in range(n):
         name, enc = _IMAGE_ENCODERS[i % len(_IMAGE_ENCODERS)]
         yield (f"media://img/{i:04d}.{name}", name,

@@ -6,6 +6,23 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+# the reference checkout (tsawler/prose testdata and model files), by
+# default a reference/ directory beside this repo; it is not part of the
+# repo, so tests that read it skip when it is absent
+REFERENCE_DIR = Path(os.environ.get(
+    "PROSE_REFERENCE_DIR",
+    Path(__file__).resolve().parent.parent.parent / "reference"))
+
+
+def requires_reference(*rel_paths: str):
+    """skipif marker for a test that reads these files under
+    REFERENCE_DIR."""
+    missing = [p for p in rel_paths if not (REFERENCE_DIR / p).is_file()]
+    return pytest.mark.skipif(
+        bool(missing),
+        reason=f"reads reference files absent under {REFERENCE_DIR} "
+               f"(set PROSE_REFERENCE_DIR): {', '.join(missing)}")
+
 
 @pytest.fixture(scope="session")
 def spark():

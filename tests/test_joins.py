@@ -1,9 +1,9 @@
-"""As-of join (window + grouped-map variants) and salted aggregation."""
+"""As-of join and the small text helpers (tagged-corpus reader, language ID,
+winnowing, BPE counts)."""
 
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -43,49 +43,6 @@ def test_asof_join_window(spark, trades_quotes):
     assert got == EXPECTED
 
 
-def test_asof_join_grouped_matches_window(spark, trades_quotes):
-    from prose_spark.operators.joins import asof_join, asof_join_grouped
-
-    trades, quotes = trades_quotes
-    w = {
-        (r.user_id, r.value): r.value_asof
-        for r in asof_join(trades, quotes, on="user_id").collect()
-    }
-    g = {
-        (r.user_id, r.value): r.value_asof
-        for r in asof_join_grouped(trades, quotes, on="user_id").collect()
-    }
-    assert g == w
-
-
-def test_salted_agg_matches_plain(spark):
-    from prose_spark.operators.joins import salted_agg
-
-    df = spark.range(0, 10000).select(
-        (F.col("id") % 5).alias("k"), F.col("id").cast("double").alias("v")
-    )
-    plain = {
-        r.k: (r.n, r.s, r.mn, r.mx)
-        for r in df.groupBy("k")
-        .agg(F.count("v").alias("n"), F.sum("v").alias("s"),
-             F.min("v").alias("mn"), F.max("v").alias("mx"))
-        .collect()
-    }
-    salted = {
-        r.k: (r.count_v, r.sum_v, r.min_v, r.max_v)
-        for r in salted_agg(
-            df, "k", {"v": "count"}, n_salts=8
-        ).join(
-            salted_agg(df, "k", {"v": "sum"}, n_salts=8), "k"
-        ).join(
-            salted_agg(df, "k", {"v": "min"}, n_salts=8), "k"
-        ).join(
-            salted_agg(df, "k", {"v": "max"}, n_salts=8), "k"
-        ).collect()
-    }
-    assert salted == plain
-
-
 def test_read_tagged():
     from prose_spark.nlp.tagger import read_tagged
 
@@ -123,8 +80,6 @@ def test_winnowing_shared_substring_guarantee(spark):
     """Winnowing (k, w) guarantees: any shared substring of length
     >= k + w - 1 yields at least one shared fingerprint; disjoint texts
     share none."""
-    from pyspark.sql import functions as F
-
     from prose_spark.operators.textstats import winnowing_fingerprints
 
     df = spark.createDataFrame(

@@ -1,7 +1,7 @@
 """Seeded media corpus (sources/media.py) + its driver queries.
 
-The torture coverage for the DECODERS lives in test_multimodal/test_jpeg/
-test_tiff; this file pins the product-side encoders feeding the driver's
+The torture coverage for the DECODERS lives in test_gif_bmp/test_tiff/
+test_webp; this file pins the product-side encoders feeding the declared
 mm_* queries: determinism, losslessness against the real decoders, and
 the end-to-end Spark stage shape.
 """
@@ -41,6 +41,19 @@ def test_encoders_lossless_roundtrip(enc):
     out = decode_image(enc(img), fake=False)
     assert out.shape == img.shape
     assert np.array_equal(out, img)
+
+
+@pytest.mark.parametrize("head", [
+    b"\xff\xd8\xff\xe0\x00\x10JFIF\x00",    # JPEG
+    b"\x59\xa6\x6a\x95" + bytes(28),          # Sun Raster
+    b"\x01\xda\x00\x01\x00\x03" + bytes(506),  # SGI
+], ids=["jpeg", "ras", "sgi"])
+def test_formats_outside_the_corpus_take_the_unsupported_path(head):
+    """Families the media corpus never produces have no decoder: they
+    raise like any unsupported format, and fake mode stubs them."""
+    with pytest.raises(NotImplementedError, match="not natively decodable"):
+        decode_image(head)
+    assert decode_image(head, fake=True).shape == (8, 8, 3)
 
 
 def test_wav_roundtrip_close():

@@ -1,11 +1,11 @@
 """NER tests — port of reference extract_test.go + model-decode checks."""
 
 import json
-from pathlib import Path
 
 import numpy as np
 import pytest
 
+from conftest import REFERENCE_DIR, requires_reference
 from prose_spark.nlp.ner import (
     chunk,
     coalesce,
@@ -19,7 +19,7 @@ from prose_spark.nlp.ner_train import adjust_pos, model_from_data
 from prose_spark.nlp.tagger import default_tagger
 from prose_spark.nlp.tokenizer import tokenize
 
-REF = Path("/root/reference/testdata")
+REF = REFERENCE_DIR / "testdata"
 
 
 def test_sum_logs_equivalent():
@@ -113,6 +113,7 @@ def test_chunk_drops_open_entity_at_eos():
     assert chunk(toks) == []
 
 
+@requires_reference("testdata/reddit_product.jsonl")
 def test_ner_prodigy_train_eval():
     # extract_test.go:68-100 — train on 80% of reddit_product, eval on 20%.
     # The Go test's reflect.DeepEqual([]string, []Entity) is always false,

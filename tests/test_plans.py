@@ -12,9 +12,12 @@ from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
-def docs_path(spark, pages_df, tmp_path_factory):
+def docs_path(spark, kg_pages_df, tmp_path_factory):
+    """The hermetic pages table as two small parquet files: it scans as
+    two partitions, the under-partitioned shape of a small input that
+    the input spread exists for."""
     p = str(tmp_path_factory.mktemp("plans") / "pages")
-    pages_df.write.parquet(p)
+    kg_pages_df.coalesce(2).write.parquet(p)
     return p
 
 
@@ -95,6 +98,49 @@ def test_fused_pipeline_honors_caller_coalesce(spark, docs_path):
         assert out.rdd.getNumPartitions() == 2
     finally:
         lo.unpersist()
+
+
+def test_fused_pipeline_spreads_layout_free_composites(spark, docs_path):
+    """A cached frame or a scan BELOW a join or union no longer sets the
+    partition count, so the under-partitioned input is spread (the
+    spread decides from the plan's top node, not from any cached node
+    anywhere in the plan)."""
+    from prose_spark.operators.triples import annotate_and_extract_triples
+
+    p = spark.sparkContext.defaultParallelism
+    pages = spark.read.parquet(docs_path)
+    en = pages.filter(F.col("lang") == "en").select("url", "text")
+    assert en.rdd.getNumPartitions() < p
+    urls = en.select("url").limit(20).cache()
+    try:
+        urls.count()
+        joined = en.join(F.broadcast(urls), "url")
+        unioned = en.unionByName(spark.read.parquet(docs_path)
+                                 .select("url", "text"))
+        for inp in (joined, unioned):
+            assert inp.rdd.getNumPartitions() < p
+            out = annotate_and_extract_triples(inp)
+            assert "RoundRobinPartitioning" in _plan(out)
+            assert out.rdd.getNumPartitions() == p
+    finally:
+        urls.unpersist()
+
+
+def test_fused_pipeline_honors_coalesce_under_filter(spark, docs_path):
+    """A caller's coalesce stays the layout when a Filter sits above it:
+    the spread looks through Project and Filter to the Repartition. The
+    filter samples (nondeterministic), so the optimizer cannot push it
+    below the coalesce as it would a deterministic predicate."""
+    from prose_spark.operators.triples import annotate_and_extract_triples
+
+    pages = spark.read.parquet(docs_path)
+    en = pages.filter(F.col("lang") == "en").select("url", "text")
+    lo = en.coalesce(2).filter(F.rand(seed=3) < 0.9)
+    top = lo._jdf.queryExecution().optimizedPlan()
+    assert top.getClass().getSimpleName() == "Filter"
+    out = annotate_and_extract_triples(lo)
+    assert "RoundRobinPartitioning" not in _plan(out)
+    assert out.rdd.getNumPartitions() == 2
 
 
 def test_broadcast_join_for_small_dim(spark):

@@ -93,8 +93,8 @@ def test_annotate_document_total(text):
 @settings(max_examples=200, deadline=None)
 @given(st.text(min_size=0, max_size=200))
 def test_portable_hash_python_reference(text):
-    """The portable md5-derived hash family (dedup.md5_long60 semantics,
-    simhash's signed 64-bit variant) matches a pure-Python reference on
+    """The portable md5-derived hash family (the first 15 md5 hex chars
+    as a long, simhash's signed 64-bit variant) matches a pure-Python reference on
     arbitrary unicode — the property both the Spark expression
     (conv(md5-hex, 16, ±10)) and the DuckDB oracle expression
     (('0x'||substr(md5,1,n))::U/BIGINT) were verified against by value

@@ -213,7 +213,7 @@ def test_segmenter_heldout():
     from collections import Counter
     from pathlib import Path
 
-    from prose_spark.nlp.segmenter import segment_with_offsets
+    from prose_spark.nlp.segmenter import default_segmenter
 
     gold_path = Path(__file__).parent / "goldens" / \
         "segmenter_heldout.json"
@@ -226,7 +226,7 @@ def test_segmenter_heldout():
     tp = n_pred = n_gold = 0
     for p in doc["passages"]:
         pred = Counter(norm(s) for s, _, _ in
-                       segment_with_offsets(p["text"]))
+                       default_segmenter().segment(p["text"]))
         gold = Counter(norm(g) for g in p["gold"])
         tp += sum((pred & gold).values())
         n_pred += sum(pred.values())
@@ -253,7 +253,7 @@ def test_segmenter_migrated_passages():
     from collections import Counter
     from pathlib import Path
 
-    from prose_spark.nlp.segmenter import segment_with_offsets
+    from prose_spark.nlp.segmenter import default_segmenter
 
     doc = json.loads((Path(__file__).parent / "goldens" /
                       "segmenter_migrated.json").read_text())
@@ -264,7 +264,7 @@ def test_segmenter_migrated_passages():
 
     for p in doc["passages"]:
         pred = Counter(norm(s) for s, _, _ in
-                       segment_with_offsets(p["text"]))
+                       default_segmenter().segment(p["text"]))
         gold = Counter(norm(g) for g in p["gold"])
         assert pred == gold, (p["id"], pred - gold, gold - pred)
 

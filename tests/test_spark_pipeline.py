@@ -708,7 +708,6 @@ def test_multimodal_plumbing(spark, pages_df):
     from prose_spark.operators.multimodal import (
         decode_image,
         extract_image_features,
-        sample_video_frames,
     )
 
     feats = extract_image_features(
@@ -729,8 +728,6 @@ def test_multimodal_plumbing(spark, pages_df):
     # not a PNG)
     with pytest.raises(NotImplementedError):
         decode_image(b"\x89PNG")
-    with pytest.raises(NotImplementedError):
-        list(sample_video_frames(b"x"))
 
 
 def _encode_png(img, color_type, filters, palette=None):
@@ -999,29 +996,6 @@ def test_canonicalize_drops_pronouns(spark):
     canon = canonicalize_mentions(mentions).collect()
     norms = {r.norm for r in canon}
     assert norms == {"acme corp"}
-
-
-def test_stateful_stream_dedup(spark, pages_df, tmp_path):
-    from prose_spark.operators.streaming import stream_dedup_urls
-
-    src = str(tmp_path / "dedup_in")
-    # duplicate every url so state must suppress the second occurrence
-    dup = pages_df.limit(20).unionAll(pages_df.limit(20))
-    dup.write.parquet(src)
-    q = (
-        stream_dedup_urls(spark, src, str(tmp_path / "ck3"))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("first_seen")
-        .option("checkpointLocation", str(tmp_path / "ck3"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM first_seen").collect()
-    urls = [r.url for r in rows]
-    assert len(urls) == 20 and len(set(urls)) == 20
-    assert all(r.n_in_batch == 2 for r in rows)  # both copies in one batch
 
 
 def test_kg_job_gold_metrics_in_markers(spark, tmp_path):

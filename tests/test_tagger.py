@@ -1,17 +1,21 @@
 """POS tagger tests — port of reference tag_test.go + gob decode checks."""
 
 import json
-from pathlib import Path
 
 import pytest
 
+from conftest import REFERENCE_DIR, requires_reference
 from prose_spark.gobdec import decode_gob_file
 from prose_spark.nlp.tagger import default_tagger, featurize, normalize
 from prose_spark.nlp.tokenizer import tokenize
 
-REF = Path("/root/reference")
+REF = REFERENCE_DIR
+_TREEBANK = requires_reference("testdata/treebank_tokens.json",
+                               "testdata/treebank_tags.json")
 
 
+@requires_reference("model/AveragedPerceptron/classes.gob",
+                    "model/AveragedPerceptron/tags.gob")
 def test_gob_decode_small():
     classes = decode_gob_file(str(REF / "model/AveragedPerceptron/classes.gob"))
     assert len(classes) == 45 and "NNP" in classes and "VBZ" in classes
@@ -51,6 +55,7 @@ def test_hardcoded_rules():
     assert t.tag(["-LRB-"]) == ["-LRB-"]
 
 
+@_TREEBANK
 def test_tag_treebank_accuracy_floor():
     # tag_test.go:40-61 — accuracy >= 0.957477 on the flat 100,676-token
     # fixture stream.
@@ -71,6 +76,7 @@ def test_featurize_keys_shape():
     assert len(feats) == 14
 
 
+@_TREEBANK
 def test_tag_heldout_generalization():
     """Held-out generalization (r4): the reference's own protocol
     (tag_test.go:40-61) trains and evaluates on the SAME fixture, so its

@@ -322,92 +322,3 @@ def test_netpbm_p1_packed_digits():
     assert np.array_equal(got[:, :, 0], exp)
     spaced = decode_image(b"P1\n4 2\n0 1 1 0 1 0 0 1")
     assert np.array_equal(spaced, got)
-
-
-def _encode_ras(img, rtype=1, depth=24):
-    h, w = img.shape[:2]
-    stride = ((w * depth // 8) + 1) & ~1
-    rows = bytearray()
-    for y in range(h):
-        if depth == 24:
-            line = (img[y, :, ::-1] if rtype != 3
-                    else img[y]).tobytes()
-        else:  # 32
-            px = img[y, :, ::-1] if rtype != 3 else img[y]
-            line = b"".join(b"\x00" + px[x].tobytes() for x in range(w))
-        rows += line + b"\x00" * (stride - len(line))
-    data = bytes(rows)
-    if rtype == 2:
-        out = bytearray()
-        i = 0
-        while i < len(data):
-            j = i
-            while (j < len(data) - 1 and data[j] == data[j + 1]
-                   and j - i < 254):
-                j += 1
-            if j - i >= 2 or data[i] == 0x80:
-                out += bytes([0x80, j - i, data[i]]) if j > i else \
-                    bytes([0x80, 0]) if data[i] == 0x80 else \
-                    bytes([data[i]])
-                i = j + 1 if j > i else i + 1
-                if j == i - 1 and data[i - 1] == 0x80 and j <= i:
-                    pass
-                continue
-            out.append(data[i])
-            i += 1
-        data = bytes(out)
-    hdr = struct.pack(">8i", 0x59A66A95, w, h, depth, len(data),
-                      rtype, 0, 0)
-    return hdr + data
-
-
-def test_ras_sgi_cross_format_real_files():
-    """Sun Raster and SGI join the lossless agreement set: six real
-    third-party encodings of the same logo now decode identically."""
-    if not _IMGDATA:
-        pytest.skip("no imghdrdata fixtures")
-    base = _IMGDATA[0] + "/"
-    png = decode_image(open(base + "python.png", "rb").read())
-    for name in ("python.ras", "python.sgi"):
-        got = decode_image(open(base + name, "rb").read())
-        assert np.array_equal(got, png), name
-
-
-def test_ras_roundtrips():
-    rng = np.random.default_rng(51)
-    img = rng.integers(0, 256, size=(9, 7, 3), dtype=np.uint8)
-    assert np.array_equal(decode_image(_encode_ras(img, 1, 24)), img)
-    assert np.array_equal(decode_image(_encode_ras(img, 3, 24)), img)
-    assert np.array_equal(decode_image(_encode_ras(img, 1, 32)), img)
-    # RLE with long runs
-    flat = np.tile(np.array([[10, 200, 40]], np.uint8), (12, 11, 1))
-    assert np.array_equal(decode_image(_encode_ras(flat, 2, 24)), flat)
-    with pytest.raises(ValueError, match="malformed RAS"):
-        decode_image(_encode_ras(img)[:30])
-
-
-def test_sgi_malformed():
-    blob = bytearray(open(_IMGDATA[0] + "/python.sgi", "rb").read()) \
-        if _IMGDATA else None
-    if blob is None:
-        pytest.skip("no sgi fixture")
-    with pytest.raises(ValueError, match="malformed SGI"):
-        decode_image(bytes(blob[:100]))
-    bad = bytes(blob[:3]) + b"\x02" + bytes(blob[4:])  # bpc=2
-    with pytest.raises(NotImplementedError, match="16-bit SGI"):
-        decode_image(bad)
-
-
-def test_sgi_truncated_rle_repeat_run():
-    """A repeat opcode whose value byte falls at the recorded run end
-    must follow the malformed-SGI ValueError contract, not IndexError
-    (r6 ADVICE)."""
-    # 1x1 gray RLE image whose single scanline ends right after the
-    # repeat opcode byte — the value byte is past end-of-data
-    hdr = struct.pack(">hBBHHHH", 474, 1, 1, 2, 1, 1, 1)
-    hdr = hdr + bytes(512 - len(hdr))
-    start, length = 520, 1          # table: one scanline, run = [0x01]
-    tables = struct.pack(">II", start, length)
-    blob = hdr + tables + bytes([0x01])  # repeat 1, value byte missing
-    with pytest.raises(ValueError, match="malformed SGI"):
-        decode_image(blob)

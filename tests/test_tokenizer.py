@@ -1,14 +1,15 @@
 """Tokenizer golden tests — 1:1 port of reference tokenize_test.go.
 
-Fixtures are read from /root/reference/testdata (read-only); inline goldens
-reproduced from tokenize_test.go:75-209.
+The treebank fixtures are read from the reference checkout's testdata
+(read-only; skipped when absent); inline goldens reproduced from
+tokenize_test.go:75-209.
 """
 
 import json
-from pathlib import Path
 
 import pytest
 
+from conftest import REFERENCE_DIR, requires_reference
 from prose_spark.nlp.tokenizer import (
     IterTokenizer,
     sanitize,
@@ -16,7 +17,7 @@ from prose_spark.nlp.tokenizer import (
     tokenize_with_offsets,
 )
 
-TESTDATA = Path("/root/reference/testdata")
+TESTDATA = REFERENCE_DIR / "testdata"
 
 
 def test_empty():
@@ -44,6 +45,8 @@ def test_simple():
     assert tokenize(text) == expected
 
 
+@requires_reference("testdata/treebank_sents.json",
+                    "testdata/treebank_words.json")
 def test_treebank_corpus():
     # tokenize_test.go:88-97 — 119 sentences, gold from NLTK
     # TreebankWordTokenizer.
